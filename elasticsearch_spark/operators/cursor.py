@@ -27,6 +27,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..plans import query_dsl as Q
+from ..sources.segment_store import read_spark
 
 
 def from_size(
@@ -112,7 +113,7 @@ class Scroll:
         snap = store.snapshot(self.snapshot_id)
         docs = read_segment_docs(spark, store, snap)
         if snap.delete_files:
-            dels = spark.read.parquet(*snap.delete_files)
+            dels = read_spark(spark, *snap.delete_files)
             docs = docs.join(dels, ["segment", "ordinal"], "left_anti")
         if predicate:
             docs = docs.where(predicate)
@@ -180,7 +181,7 @@ def terminate_after_scan(
     for seg in snap.segments:
         for f in sorted(glob.glob(os.path.join(store.docs_path(seg.segment_id), "*.parquet"))):
             legs.append(
-                spark.read.parquet(f).withColumn("segment", F.lit(seg.segment_id))
+                read_spark(spark, f).withColumn("segment", F.lit(seg.segment_id))
             )
     docs = reduce(lambda a, b: a.unionByName(b), legs)
     dels = _deletes_df(spark, store, snap)

@@ -39,7 +39,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..functions import analysis, codec, scoring
-from ..sources.segment_store import SegmentMeta, SegmentStore
+from ..sources.segment_store import SegmentMeta, SegmentStore, read_spark
 
 BLOCK_BITS = 12
 BLOCK_RANGE = 1 << BLOCK_BITS  # ordinals per postings block
@@ -466,13 +466,10 @@ def build_segment(
     # term dictionary: (field, term, df) aggregated from the written postings
     # (cheap columnar re-read of small columns) — query-time stats become a
     # term-pruned point read instead of a per-query aggregation job.
-    written = spark.read.parquet(store.postings_path(seg_id))
+    written = read_spark(spark, store.postings_path(seg_id))
     (
         written.groupBy("field", "term")
-        .agg(
-            F.sum("n").alias("df"),
-            F.sum("max_tf").alias("cf_ub"),  # upper bound; exact cf needs tf sums
-        )
+        .agg(F.sum("n").alias("df"))
         .sortWithinPartitions("field", "term")
         .write.mode("overwrite")
         .parquet(store.term_stats_path(seg_id))

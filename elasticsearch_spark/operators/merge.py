@@ -30,7 +30,7 @@ import os
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
-from ..sources.segment_store import SegmentMeta, SegmentStore
+from ..sources.segment_store import SegmentMeta, SegmentStore, read_spark
 from .index_build import DOC_COLS, build_segment
 
 FLOOR_BYTES = 2 * 1024 * 1024  # MergePolicyConfig.java:123 floor_segment 2mb
@@ -61,10 +61,10 @@ def merge_segments(
 
     docs = None
     for sid in segment_ids:
-        d = spark.read.parquet(store.docs_path(sid)).withColumn("segment", F.lit(sid))
+        d = read_spark(spark, store.docs_path(sid)).withColumn("segment", F.lit(sid))
         docs = d if docs is None else docs.unionByName(d)
     if snap.delete_files:
-        dels = spark.read.parquet(*snap.delete_files)
+        dels = read_spark(spark, *snap.delete_files)
         docs = docs.join(dels, ["segment", "ordinal"], "left_anti")
     live = docs.select(*DOC_COLS)
 
@@ -92,7 +92,7 @@ def merge_segments(
         # accumulated files, per-file jobs make commit latency linear in
         # file count, the very situation this pruning targets)
         refs = (
-            spark.read.parquet(*snap.delete_files)
+            read_spark(spark, *snap.delete_files)
             .select(F.input_file_name().alias("file"), "segment")
             .where(F.col("segment").isin(sorted(live_ids)))
             .select("file")

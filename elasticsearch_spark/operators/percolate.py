@@ -36,6 +36,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions import analysis
+from ..plans.query_dsl import min_should_match
 
 
 class UnextractableQuery(ValueError):
@@ -45,24 +46,6 @@ class UnextractableQuery(ValueError):
     handles them exactly. Distinct from a plain ValueError, which signals an
     INVALID stored query (e.g. a malformed minimum_should_match) and always
     propagates to the caller."""
-
-
-def _msm(raw, n_terms: int) -> int:
-    """minimum_should_match value: int, numeric string, or "30%"-style
-    percentage (Queries.calculateMinShouldMatch — truncating, floor 1 here
-    since a stored OR query always needs at least one term)."""
-    if raw is None:
-        return 1
-    if isinstance(raw, str):
-        raw = raw.strip()
-        if raw.endswith("%"):
-            return max(1, int(n_terms * int(raw[:-1]) / 100.0))
-    try:
-        return int(raw)
-    except (TypeError, ValueError):
-        raise ValueError(
-            f"percolate minimum_should_match must be an integer or 'N%': {raw!r}"
-        ) from None
 
 
 def _query_terms(query: dict) -> tuple[list[str], int, bool]:
@@ -81,7 +64,10 @@ def _query_terms(query: dict) -> tuple[list[str], int, bool]:
             spec = {"query": spec}
         terms = list(dict.fromkeys(analysis.analyze(spec["query"])))
         op = spec.get("operator", "or").lower()
-        need = len(terms) if op == "and" else _msm(spec.get("minimum_should_match"), len(terms))
+        need = (
+            len(terms) if op == "and"
+            else min_should_match(spec.get("minimum_should_match"), len(terms))
+        )
         return terms, need, False
     if kind in ("term", "terms"):
         (field, v), = body.items()

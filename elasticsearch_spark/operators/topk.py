@@ -40,9 +40,10 @@ from dataclasses import dataclass, field
 import pandas as pd
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from ..functions import analysis, scoring
-from ..sources.segment_store import SegmentStore, Snapshot
+from ..sources.segment_store import SegmentStore, Snapshot, read_point, read_spark
 from .index_build import BLOCK_RANGE, INDEXED_FIELDS, KEYWORD_FIELDS, kw_field
 
 BUCKET_BLOCKS = 64  # blocks per kernel group: intra-segment parallelism unit
@@ -291,6 +292,15 @@ class DocsPlan:
 
 
 # ------------------------------------------------------------------ reading
+def _ft_filters(ft_pairs) -> list[list[tuple]]:
+    """pyarrow DNF filter selecting the (field, term) pairs: one conjunct per
+    field, so term-sorted files prune row groups on `term` min/max."""
+    by_field: dict[str, list[str]] = {}
+    for f, t in sorted(set(ft_pairs)):
+        by_field.setdefault(f, []).append(t)
+    return [[("field", "=", f), ("term", "in", ts)] for f, ts in by_field.items()]
+
+
 def read_segment_postings(
     spark: SparkSession, store: SegmentStore, snap: Snapshot,
     ft_pairs: list[tuple[str, str]],
@@ -304,7 +314,7 @@ def read_segment_postings(
         pred = c if pred is None else (pred | c)
     parts = []
     for seg in snap.segments:
-        d = spark.read.parquet(store.postings_path(seg.segment_id))
+        d = read_spark(spark, store.postings_path(seg.segment_id))
         if "field" not in d.columns:  # pre-multi-field segment: text only
             d = d.withColumn("field", F.lit("text"))
         parts.append(d.where(pred).withColumn("segment", F.lit(seg.segment_id)))
@@ -321,7 +331,7 @@ def read_segment_docs(spark: SparkSession, store: SegmentStore, snap: Snapshot) 
     parts = []
     for seg in snap.segments:
         parts.append(
-            spark.read.parquet(store.docs_path(seg.segment_id)).withColumn(
+            read_spark(spark, store.docs_path(seg.segment_id)).withColumn(
                 "segment", F.lit(seg.segment_id)
             )
         )
@@ -335,28 +345,38 @@ def term_stats_lookup(
     spark: SparkSession, store: SegmentStore, snap: Snapshot,
     ft_pairs: list[tuple[str, str]],
 ) -> dict[tuple[str, str], int]:
-    """df(field, term) from the per-segment term-dictionary tables — a
-    term-pruned point read (the Lucene terms-dict seek analog), summed across
-    segments."""
+    """df(field, term) from the per-segment term-dictionary tables, summed
+    across segments: a driver-side seek into the (field, term)-sorted
+    dictionaries (the Lucene terms-dict seek analog), no Spark job."""
     if not ft_pairs:
         return {}
-    terms = sorted({t for _, t in ft_pairs})
-    parts = []
-    for seg in snap.segments:
-        d = spark.read.parquet(store.term_stats_path(seg.segment_id)).where(
-            F.col("term").isin(terms)
-        )
-        if "field" not in d.columns:  # pre-multi-field segment: text only
-            d = d.withColumn("field", F.lit("text"))
-        parts.append(d.select("field", "term", "df"))
-    df = parts[0]
-    for p in parts[1:]:
-        df = df.unionByName(p)
-    # ONE job for the whole stats phase, not one sequential job per segment
+    filters = _ft_filters(ft_pairs)
     out: dict[tuple[str, str], int] = {}
-    for r in df.groupBy("field", "term").agg(F.sum("df").alias("df")).collect():
-        out[(r.field, r.term)] = int(r.df)
-    return {k: v for k, v in out.items() if k in set(ft_pairs)}
+    for seg in snap.segments:
+        t = read_point(
+            store.term_stats_path(seg.segment_id), ["field", "term", "df"], filters
+        ).to_pydict()
+        for f, term, df in zip(t["field"], t["term"], t["df"]):
+            out[(f, term)] = out.get((f, term), 0) + df
+    return out
+
+
+def _postings_blocks(
+    store: SegmentStore, snap: Snapshot, ft_pairs, cap: int
+) -> list[tuple[str, int]] | None:
+    """Distinct (segment, bk) postings blocks holding any of the (field, term)
+    pairs, read on the driver from the postings' small key columns (the
+    block-list seek; no encoded stream is decoded). None past `cap` blocks."""
+    filters = _ft_filters(ft_pairs)
+    blocks: set[tuple[str, int]] = set()
+    for seg in snap.segments:
+        t = read_point(
+            store.postings_path(seg.segment_id), ["field", "term", "bk"], filters
+        )
+        blocks.update((seg.segment_id, bk) for bk in set(t.column("bk").to_pylist()))
+        if len(blocks) > cap:
+            return None
+    return sorted(blocks)
 
 
 def expand_terms(
@@ -377,7 +397,7 @@ def expand_terms(
     With neither given, MAX_CLAUSE_COUNT applies as the backstop."""
     parts = []
     for seg in snap.segments:
-        d = spark.read.parquet(store.term_stats_path(seg.segment_id))
+        d = read_spark(spark, store.term_stats_path(seg.segment_id))
         if "field" in d.columns:
             d = d.where(F.col("field") == field_name)
         elif field_name != "text":
@@ -669,7 +689,7 @@ class _Lowerer:
         # broadcast join (the dictionary scan streams; nothing is collected)
         dict_parts = []
         for seg in self.snap.segments:
-            d = self.spark.read.parquet(self.store.term_stats_path(seg.segment_id))
+            d = read_spark(self.spark, self.store.term_stats_path(seg.segment_id))
             if "field" not in d.columns:  # pre-multi-field segment: text only
                 d = d.withColumn("field", F.lit("text"))
             dict_parts.append(d.where(F.col("field") == field_).select("term", "df"))
@@ -760,7 +780,7 @@ class _Lowerer:
 
     # -- scoring-context lowering (mirrors query_dsl._scored_leaf/_compile)
     def lower(self, q: dict) -> object:
-        from ..plans.query_dsl import normalize_query
+        from ..plans.query_dsl import min_should_match, normalize_query
 
         q = normalize_query(q)
         (kind, body), = q.items()
@@ -896,7 +916,7 @@ class _Lowerer:
             op = str(body.get("operator", "or")).lower()
             need = (
                 len(qterms) if op == "and"
-                else int(body.get("minimum_should_match") or 1)
+                else min_should_match(body.get("minimum_should_match"), len(qterms))
             )
             return BoolNode(
                 should=[
@@ -2058,20 +2078,15 @@ def _dv_block_pred(spark, store, snap, nq: dict):
     cap = MAX_CHANNEL_PRUNE_RANGES * 64
     blocks: set[tuple[str, int]] | None = None
     for col, lo, hi in constraints:
-        parts = []
+        # driver-side seek into the value-sorted block index: row groups
+        # outside [lo, hi] are pruned by their min/max statistics
+        filters = [("col", "=", col), ("val", ">=", lo), ("val", "<=", hi)]
+        got: set[tuple[str, int]] = set()
         for seg, p in zip(snap.segments, paths):
-            parts.append(
-                spark.read.parquet(p)
-                .where((F.col("col") == col) & F.col("val").between(lo, hi))
-                .select(F.lit(seg.segment_id).alias("segment"), "bk")
-            )
-        df = parts[0]
-        for q in parts[1:]:
-            df = df.unionByName(q)
-        rows = df.distinct().limit(cap + 1).collect()
-        if len(rows) > cap:
+            bks = read_point(p, ["bk"], filters).column("bk").to_pylist()
+            got.update((seg.segment_id, bk) for bk in bks)
+        if len(got) > cap:
             continue  # unselective constraint: no pruning value
-        got = {(r["segment"], int(r["bk"])) for r in rows}
         blocks = got if blocks is None else (blocks & got)
     if blocks is None:
         return None
@@ -2081,8 +2096,7 @@ def _dv_block_pred(spark, store, snap, nq: dict):
 
 
 def _channels_df(
-    spark: SparkSession, docs: DataFrame, channels: list[Channel],
-    del_df: DataFrame | None,
+    docs: DataFrame, channels: list[Channel], del_df: DataFrame | None
 ) -> DataFrame:
     """One docs scan emitting (segment, ordinal, fid, val) rows for every
     channel (rows exist only where the expr is non-null — allow channels use
@@ -2111,7 +2125,10 @@ def _channels_df(
             )
         )
     if not parts:
-        return spark.createDataFrame([], "segment string, ordinal long, fid int, val double")
+        # an empty local relation: no rows, and no scan or Python task behind it
+        return docs.select(
+            "segment", "ordinal", F.lit(0).alias("fid"), F.lit(0.0).alias("val")
+        ).where(F.lit(False))
     out = parts[0]
     for p in parts[1:]:
         out = out.unionByName(p)
@@ -2336,55 +2353,64 @@ def search_indexed(
         # _anchored), so channel rows (function_score values, terms_set
         # thresholds, filters) are only needed inside candidate blocks —
         # anchored function_score/terms_set queries must not scan O(corpus).
-        # The collect is capped: past the cap the query's terms cover a large
-        # share of the corpus and a full scan is the honest plan anyway.
-        cap = MAX_CHANNEL_PRUNE_RANGES * 64
-        rows = (
-            postings.select("segment", "bk").distinct().limit(cap + 1).collect()
-        )
-        if len(rows) <= cap:
-            pred = _candidate_block_pred([(r["segment"], r["bk"]) for r in rows])
+        # The block list is capped: past the cap the query's terms cover a
+        # large share of the corpus and a full scan is the honest plan anyway.
+        blocks = _postings_blocks(store, snap, live_ft, MAX_CHANNEL_PRUNE_RANGES * 64)
+        if blocks is not None:
+            pred = _candidate_block_pred(blocks)
             if pred is not None:
                 chan_docs = docs.where(pred)
-    extras = _channels_df(spark, chan_docs, plan.channels, del_df)
+    extras = _channels_df(chan_docs, plan.channels, del_df)
     kernel = _make_kernel(plan.tree, weights, avgdl, k, plan.phrase_fts)
     local = run_kernel(postings, extras, kernel)
 
     # FETCH PHASE (SearchPhaseController analog): the kernels return at most
-    # buckets*k winners — collect that tiny set to the coordinator and
-    # re-read ONLY their rows from the docs tables with an ordinal IN-filter
-    # per segment. Parquet pushes In(ordinal) into row-group pruning (docs
-    # files are ordinal-sorted), so fetch cost is O(k) point reads, not a
-    # full docs scan joined against k rows.
+    # buckets*k winners — collect that tiny set to the coordinator and point-
+    # read ONLY their keys from the docs tables on the driver, with an
+    # ordinal IN-filter per segment that prunes row groups (docs files are
+    # ordinal-sorted): O(k) reads, no Spark job.
     winners = local.collect()
     if not winners:
         return _empty_result(docs)
     by_seg: dict[str, dict[int, float]] = {}
     for r in winners:
-        by_seg.setdefault(r.segment, {})[int(r.ordinal)] = float(r.score)
-    parts = []
+        by_seg.setdefault(r.segment, {})[r.ordinal] = r.score
+    hits = {"conv_id": [], "turn_idx": [], "score": []}
     for seg, ordmap in by_seg.items():
-        d = (
-            spark.read.parquet(store.docs_path(seg))
-            .where(F.col("ordinal").isin(list(ordmap)))
-            .select("ordinal", "conv_id", "turn_idx")
-            .withColumn("segment", F.lit(seg))
-        )
-        parts.append(d)
-    fetched = parts[0]
-    for p in parts[1:]:
-        fetched = fetched.unionByName(p)
-    score_rows = [(seg, o, s) for seg, m in by_seg.items() for o, s in m.items()]
-    scores = F.broadcast(
-        spark.createDataFrame(score_rows, "segment string, ordinal long, score double")
+        t = read_point(
+            store.docs_path(seg), ["ordinal", "conv_id", "turn_idx"],
+            [("ordinal", "in", list(ordmap))],
+        ).to_pydict()
+        hits["conv_id"] += t["conv_id"]
+        hits["turn_idx"] += t["turn_idx"]
+        hits["score"] += [ordmap[o] for o in t["ordinal"]]
+    return _final_top_k(spark, docs, hits, k)
+
+
+def _final_top_k(spark: SparkSession, docs: DataFrame, hits: dict, k: int) -> DataFrame:
+    """The coordinator's merge of the fetched winners (`hits`: conv_id,
+    turn_idx and score columns) into the top k, in the order `_order_cols`
+    defines, as a driver-local frame.
+
+    Both roundings are Spark's own (HALF_UP on the decimal value), computed by
+    a projection over a local relation, which Spark folds on the driver
+    without a job; only the sort on (rounded score desc, conv_id, turn_idx)
+    runs in Python. Frames built from pandas go through Arrow into a local
+    relation, so collecting the result runs no job either."""
+    cols = {f.name: f for f in docs.schema.fields}
+    schema = T.StructType(
+        [cols["conv_id"], cols["turn_idx"], T.StructField("score", T.DoubleType())]
     )
-    out = (
-        fetched.join(scores, ["segment", "ordinal"])
-        .orderBy(*_order_cols())
-        .limit(k)
-        .select("conv_id", "turn_idx", F.round(F.col("score"), 4).alias("score"))
+    rounded = (
+        spark.createDataFrame(pd.DataFrame(hits), schema)
+        .select("conv_id", "turn_idx", F.round("score", 6), F.round("score", 4))
+        .collect()
     )
-    return out
+    rounded.sort(key=lambda r: (-r[2], r[0], r[1]))
+    top = pd.DataFrame(
+        [(r[0], r[1], r[3]) for r in rounded[:k]], columns=["conv_id", "turn_idx", "score"]
+    )
+    return spark.createDataFrame(top, schema)
 
 
 def multi_store_search(
@@ -2407,8 +2433,7 @@ def multi_store_search(
 def _deletes_df(spark: SparkSession, store: SegmentStore, snap: Snapshot) -> DataFrame | None:
     if not snap.delete_files:
         return None
-    df = spark.read.parquet(*snap.delete_files)
-    return df
+    return read_spark(spark, *snap.delete_files)
 
 
 def _apply_deletes(spark, store, snap, docs: DataFrame) -> DataFrame:

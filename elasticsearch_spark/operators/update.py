@@ -29,7 +29,7 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..sources.segment_store import SegmentStore
+from ..sources.segment_store import SegmentStore, read_spark
 from .index_build import DOC_COLS, build_segment
 from .topk import read_segment_docs
 
@@ -90,7 +90,7 @@ def apply_updates(
 
     docs = read_segment_docs(spark, store, snap)
     if snap.delete_files:
-        dels = spark.read.parquet(*snap.delete_files)
+        dels = read_spark(spark, *snap.delete_files)
         docs = docs.join(dels, ["segment", "ordinal"], "left_anti")
 
     u = updates.alias("u")
@@ -159,7 +159,7 @@ def read_snapshot_table(
         raise ValueError("no such snapshot")
     docs = read_segment_docs(spark, store, snap)
     if snap.delete_files:
-        dels = spark.read.parquet(*snap.delete_files)
+        dels = read_spark(spark, *snap.delete_files)
         docs = docs.join(dels, ["segment", "ordinal"], "left_anti")
     return docs.select(*DOC_COLS)
 
@@ -221,7 +221,7 @@ def delete_by_query(
         raise ValueError("empty store")
     docs = read_segment_docs(spark, store, snap)
     if snap.delete_files:
-        dels = spark.read.parquet(*snap.delete_files)
+        dels = read_spark(spark, *snap.delete_files)
         docs = docs.join(dels, ["segment", "ordinal"], "left_anti")
     hit = docs.where(predicate).select("segment", "ordinal").persist()
     n = hit.count()

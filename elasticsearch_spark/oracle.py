@@ -642,6 +642,7 @@ def _multi_match_cross_sql(body: dict, a: str) -> tuple[str, str]:
     tie_breaker; terms combine with operator/msm over any-field matches."""
     from .functions import scoring
     from .functions.analysis import analyze
+    from .plans.query_dsl import min_should_match
 
     qterms = list(dict.fromkeys(analyze(body["query"])))
     if not qterms:  # zero_terms_query=NONE
@@ -655,7 +656,7 @@ def _multi_match_cross_sql(body: dict, a: str) -> tuple[str, str]:
     tie = float(body.get("tie_breaker", 0.0))
     need = (
         len(qterms) if op == "and"
-        else int(body.get("minimum_should_match") or 1)
+        else min_should_match(body.get("minimum_should_match"), len(qterms))
     )
     terms_in = ", ".join(_sql_str(t) for t in qterms)
     tk = {f: f"tk{i}" for i, f in enumerate(fields)}

@@ -60,6 +60,34 @@ class Compiled:
         return d.select(*ctx.key_cols, F.lit(float(score)).alias("score"))
 
 
+def min_should_match(raw, n_terms: int) -> int:
+    """minimum_should_match over `n_terms` optional clauses: an int, a numeric
+    string, or an "N%" share of n_terms, truncated
+    (Queries.calculateMinShouldMatch). Floored at 1, as an OR of optional
+    clauses always needs one match; None means 1. Shared by the logical
+    plan, the kernel lowering, the oracle and percolate."""
+    if raw is None:
+        return 1
+    if isinstance(raw, str):
+        raw = raw.strip()
+        if raw.endswith("%"):
+            return max(1, int(n_terms * int(raw[:-1]) / 100.0))
+    try:
+        return max(1, int(raw))
+    except (TypeError, ValueError):
+        raise ValueError(
+            f"minimum_should_match must be an integer or 'N%': {raw!r}"
+        ) from None
+
+
+def _reject_source_filter(src: dict) -> None:
+    """Interval filter rules (filter: containing/not_containing/...) are out
+    of scope on every source; raise rather than silently drop them."""
+    (_, sb), = src.items()
+    if isinstance(sb, dict) and sb.get("filter"):
+        raise ValueError("intervals source filters are unsupported")
+
+
 def normalize_query(q: dict) -> dict:
     """ES-style query rewrites shared by the Spark compiler AND the oracle
     generator (the Rewriteable fixpoint analog, index/query/Rewriteable.java):
@@ -129,6 +157,7 @@ def normalize_query(q: dict) -> dict:
         # compiler, the indexed lowering, and the oracle share ONE rewrite.
         (ifield, ispec), = body.items()
         (sk, _), = ispec.items()
+        _reject_source_filter(ispec)
         if sk == "match":
             return q
         return {"intervals": {ifield: {"match": _intervals_source(ispec)}}}
@@ -228,6 +257,7 @@ def _intervals_source_step(src: dict) -> tuple[object, str]:
     (step, display). Multi-position sources nested inside all_of/any_of
     (multi-term match children, nested all_of) are genuinely nested interval
     algebra — unsupported, raised loudly."""
+    _reject_source_filter(src)
     (sk, sb), = src.items()
     if sk == "match":
         terms = analysis.analyze(sb["query"] if isinstance(sb, dict) else sb)
@@ -276,19 +306,12 @@ def _intervals_source(spec: dict) -> dict:
     maps its single-position children onto the `steps` chain with its own
     ordered/max_gaps; a standalone prefix/wildcard/fuzzy/any_of becomes a
     single-step source (each surviving occurrence a width-0 interval).
-    Interval filter rules (filter: containing/not_containing/...) are out
-    of scope and raise."""
+    Source filters were rejected by normalize_query (this source) and by
+    _intervals_source_step (every child)."""
     (sk, sb), = spec.items()
-    if isinstance(sb, dict) and sb.get("filter"):
-        raise ValueError("intervals source filters are unsupported")
     if sk == "all_of":
         steps, disp = [], []
         for child in sb["intervals"]:
-            if isinstance(child, dict) and len(child) == 1 \
-                    and next(iter(child)) != "match" \
-                    and isinstance(next(iter(child.values())), dict) \
-                    and next(iter(child.values())).get("filter"):
-                raise ValueError("intervals source filters are unsupported")
             st, d = _intervals_source_step(child)
             steps.append(st)
             disp.append(d)
@@ -1603,7 +1626,7 @@ def _multi_match_cross(ctx: _Ctx, body: dict) -> Compiled:
         .groupBy(*ctx.key_cols)
         .agg(F.sum("_ts").alias("score"), F.count(F.lit(1)).alias("_nm"))
     )
-    need = len(qterms) if op == "and" else int(msm or 1)
+    need = len(qterms) if op == "and" else min_should_match(msm, len(qterms))
     return Compiled(scored=agg.where(F.col("_nm") >= need).drop("_nm"))
 
 

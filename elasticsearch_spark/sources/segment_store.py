@@ -10,9 +10,19 @@ InternalEngine.java:889-968) AND of Iceberg snapshots for time-travel:
                                     per-segment lineage/metrics (resumability)
     seg_<id>/docs.parquet        -> ordinal, conv_id, turn_idx, role, text,
                                     tool, ts, dl, norm  (sorted by ordinal)
-    seg_<id>/postings.parquet    -> term, df, cf, max_tf, blocks[...]
+    seg_<id>/postings.parquet    -> field, term, bk, n, max_tf, min_dlq,
+                                    encoded docs/tfs/norms/positions per block
+    seg_<id>/term_stats.parquet  -> field, term, df  (sorted by field, term)
+    seg_<id>/dv_stats.parquet    -> col, val, bk     (sorted by col, val)
     deletes/<id>.parquet         -> (segment string, ordinal long) positional
                                     deletes (Lucene liveDocs analog)
+
+Every table is a Spark-written parquet directory. Reads come in two kinds
+(see the bottom of this module): the tables a query scans in bulk (docs,
+postings, delete files) are Spark DataFrames whose schema comes from the
+parquet footer, and the small sorted tables a query only seeks into (term
+dictionary, dv block index, a few docs rows by ordinal) are read on the
+driver with pyarrow, pruned by row-group min/max statistics.
 
 Commit protocol (mirrors Iceberg): write all data files, write the new
 snapshot json, then atomically swap CURRENT via os.rename. A killed build
@@ -32,6 +42,11 @@ import time
 import uuid
 from dataclasses import dataclass, field
 from typing import Any
+
+import pyarrow as pa
+import pyarrow.parquet as pq
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructField, StructType
 
 
 @dataclass
@@ -173,8 +188,9 @@ class SegmentStore:
         return os.path.join(self.root, segment_id, "postings.parquet")
 
     def term_stats_path(self, segment_id: str) -> str:
-        """Per-segment term dictionary (term, df, cf) — the Lucene terms-dict
-        metadata analog; makes the query stats phase a pruned point read."""
+        """Per-segment term dictionary (field, term, df) — the Lucene
+        terms-dict metadata analog; makes the query stats phase a pruned
+        point read."""
         return os.path.join(self.root, segment_id, "term_stats.parquet")
 
     def dv_stats_path(self, segment_id: str) -> str:
@@ -248,3 +264,58 @@ class SegmentStore:
         for base, _, files in os.walk(d):
             total += sum(os.path.getsize(os.path.join(base, f)) for f in files)
         return total
+
+
+# ------------------------------------------------------------------ reading
+# Key under which Spark stores the DataFrame schema (as StructType JSON) in
+# the footer of every parquet file it writes.
+SPARK_SCHEMA_KEY = b"org.apache.spark.sql.parquet.row.metadata"
+
+
+def _data_files(path: str) -> list[str]:
+    """Parquet files of a table directory, skipping the `_SUCCESS` marker and
+    hidden `.crc` files (the same files Spark and pyarrow datasets read)."""
+    if not os.path.isdir(path):
+        return [path]
+    return [
+        os.path.join(path, f)
+        for f in sorted(os.listdir(path))
+        if not f.startswith(("_", "."))
+    ]
+
+
+def footer_schema(path: str) -> StructType | None:
+    """The Spark schema of a table, read from the footer of its first data
+    file: one small driver read instead of the schema-inference job that
+    `spark.read.parquet` runs per call. Tables are immutable once committed,
+    so the footer never goes stale. None when the table has no data file or
+    was not written by Spark."""
+    files = _data_files(path)
+    if not files:
+        return None
+    meta = pq.read_metadata(files[0]).metadata or {}
+    raw = meta.get(SPARK_SCHEMA_KEY)
+    if raw is None:
+        return None
+    # every field nullable, as Spark reports a schema it infers from parquet
+    st = StructType.fromJson(json.loads(raw))
+    return StructType([StructField(f.name, f.dataType, True, f.metadata) for f in st.fields])
+
+
+def read_spark(spark: SparkSession, *paths: str) -> DataFrame:
+    """Spark DataFrame over one or more tables of the same schema (docs,
+    postings, delete files), with the schema from the first table's footer."""
+    schema = footer_schema(paths[0])
+    reader = spark.read if schema is None else spark.read.schema(schema)
+    return reader.parquet(*paths)
+
+
+def read_point(path: str, columns: list[str], filters: list) -> pa.Table:
+    """Driver-side read of a few columns of a small or sorted table.
+
+    `filters` is pyarrow's DNF form (a list of AND-lists of
+    (column, op, value) tuples, OR-ed together); row groups whose min/max
+    statistics exclude every conjunct are never decoded. This is the seek
+    into the term dictionary, the dv block index, or the docs rows of a few
+    ordinals: no Spark job, no task scheduling."""
+    return pq.read_table(_data_files(path), columns=columns, filters=filters)

@@ -1,6 +1,25 @@
 from __future__ import annotations
 
+import uuid
+
 import pytest
+
+
+def spark_jobs(spark, fn):
+    """Run `fn()` and count the Spark jobs it started: returns (result, jobs).
+
+    The jobs are tagged with a fresh job group and counted from the status
+    tracker once the listener bus has delivered their events. Import it in a
+    test module with `from conftest import spark_jobs`."""
+    sc = spark.sparkContext
+    group = f"spark-jobs-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "counted by spark_jobs")
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty(30_000)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
 
 
 @pytest.fixture(scope="session")

@@ -4,10 +4,12 @@ property from SURVEY.md §5.3), plus segment/resume invariants."""
 from __future__ import annotations
 
 import pytest
+from conftest import spark_jobs
 from pyspark.sql import functions as F
 
-from elasticsearch_spark.operators import index_build, topk
+from elasticsearch_spark.operators import index_build, topk, update
 from elasticsearch_spark.plans import query_dsl as Q
+from elasticsearch_spark.sources import segment_store
 
 KEYS = ["conv_id", "turn_idx"]
 
@@ -49,6 +51,15 @@ INDEXED_QUERIES = [
                 {"match": {"text": "query"}},
             ],
             "filter": [{"term": {"role": "user"}}],
+        }
+    },
+    # cross_fields with a percentage msm: 75% of 3 terms = 2
+    {
+        "multi_match": {
+            "query": "search join fast",
+            "fields": ["text", "tool"],
+            "type": "cross_fields",
+            "minimum_should_match": "75%",
         }
     },
 ]
@@ -121,3 +132,45 @@ def test_ordinals_dense_and_key_ordered(spark, store):
     assert [r.ordinal for r in rows] == list(range(len(rows)))
     keys = [(r.conv_id, r.turn_idx) for r in rows]
     assert keys == sorted(keys)
+
+
+MATCHING = {"match": {"text": "spark query fast"}}
+KERNEL_JOBS = 3  # the postings cogroup; every other read is a driver read
+
+
+def test_matching_query_runs_only_the_kernel_jobs(spark, store):
+    rows, jobs = spark_jobs(spark, lambda: topk.search_indexed(spark, store, MATCHING).collect())
+    assert len(rows) == 10
+    assert jobs <= KERNEL_JOBS
+
+
+def test_job_count_does_not_grow_with_segments(spark, transcripts, tmp_path_factory):
+    """3 segments with a delete file run the same jobs as 1 segment with a
+    delete file: no read pays a per-segment (or per-delete-file) job. The
+    deletes ride the kernel's cogroup as its deny channel."""
+    counts = []
+    for n_slices in (1, 3):
+        root = str(tmp_path_factory.mktemp(f"index_deletes_{n_slices}"))
+        st = index_build.build_index(spark, transcripts, root, n_slices=n_slices, partitions=4)
+        n_deleted, _ = update.delete_by_query(spark, st, "turn_idx = 0")
+        snap = st.snapshot()
+        assert n_deleted > 0
+        assert len(snap.segments) == n_slices and len(snap.delete_files) == 1
+        rows, jobs = spark_jobs(spark, lambda: topk.search_indexed(spark, st, MATCHING).collect())
+        assert len(rows) == 10 and all(r.turn_idx != 0 for r in rows)
+        counts.append(jobs)
+    assert counts[0] == counts[1] <= KERNEL_JOBS
+
+
+def test_footer_schema_equals_inferred_schema(spark, transcripts, tmp_path_factory):
+    root = str(tmp_path_factory.mktemp("index_footer"))
+    st = index_build.build_index(spark, transcripts, root, n_slices=1, partitions=4)
+    update.delete_by_query(spark, st, "turn_idx = 1")
+    snap = st.snapshot()
+    sid = snap.segments[0].segment_id
+    paths = [
+        st.docs_path(sid), st.postings_path(sid), st.term_stats_path(sid),
+        st.dv_stats_path(sid), *snap.delete_files,
+    ]
+    for p in paths:
+        assert segment_store.footer_schema(p) == spark.read.parquet(p).schema, p

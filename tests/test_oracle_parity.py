@@ -60,3 +60,27 @@ def test_join_query_matches_oracle(name, spark, transcripts, duck):
         for c, t, s in duck.execute(oracle.search_sql(qd, DEFAULT_K)).fetchall()
     }
     assert got == want, f"{name}: spark={sorted(got)} oracle={sorted(want)}"
+
+
+def test_cross_fields_percent_msm_matches_oracle(spark, transcripts, duck):
+    """cross_fields minimum_should_match as a percentage: "75%" of the 3
+    query terms is 2 on the logical plan and the oracle alike, the same
+    answer as the integer msm of the `multi_match_cross_msm` fixture."""
+    body = dict(SEARCH_QUERIES["multi_match_cross_msm"]["multi_match"])
+    body["minimum_should_match"] = "75%"
+    qd = {"multi_match": body}
+    got = {
+        (r.conv_id, r.turn_idx, r.score)
+        for r in Q.search(transcripts, qd, KEYS, k=DEFAULT_K).collect()
+    }
+    want = {
+        (c, int(t), float(s))
+        for c, t, s in duck.execute(oracle.search_sql(qd, DEFAULT_K)).fetchall()
+    }
+    fixture = {
+        (r.conv_id, r.turn_idx, r.score)
+        for r in Q.search(
+            transcripts, SEARCH_QUERIES["multi_match_cross_msm"], KEYS, k=DEFAULT_K
+        ).collect()
+    }
+    assert got and got == want == fixture

@@ -277,7 +277,7 @@ class TestKeywordDfFromDictionary:
             raise AssertionError("keyword df took a docs-column scan")
 
         # instance-level patch: only self.docs is poisoned; the term
-        # dictionary reads (spark.read.parquet(...).where) are untouched
+        # dictionary reads (driver-side pyarrow seeks) are untouched
         monkeypatch.setattr(transcripts, "where", boom)
         leaf = low.keyword_idf_leaf("role", ["user", "assistant"])
         # df resolved from the dictionary: the CASE channel has real idf arms

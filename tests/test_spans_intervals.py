@@ -903,3 +903,25 @@ class TestIntervalsSources:
                 Q.normalize_query(qd)
             with pytest.raises(ValueError):
                 oracle.search_sql(qd)
+
+    def test_match_source_filter_raises_everywhere(self, spark, tmp_path_factory):
+        """A `filter` on a match source, top-level or an all_of child, raises
+        like the filter of every other source instead of being dropped."""
+        from elasticsearch_spark import oracle
+
+        _, store = self._store(spark, tmp_path_factory)
+        filt = {"containing": {"match": {"query": "hash"}}}
+        bad = [
+            {"intervals": {"text": {"match": {"query": "join table", "filter": filt}}}},
+            {"intervals": {"text": {"all_of": {"intervals": [
+                {"match": {"query": "join", "filter": filt}},
+                {"match": {"query": "table"}}]}}}},
+        ]
+        for qd in bad:
+            for run in (
+                lambda: Q.normalize_query(qd),
+                lambda: oracle.search_sql(qd),
+                lambda: topk.search_indexed(spark, store, qd, k=10),
+            ):
+                with pytest.raises(ValueError, match="filters are unsupported"):
+                    run()
