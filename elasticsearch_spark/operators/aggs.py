@@ -768,6 +768,16 @@ def significant_terms(
 
 
 # ------------------------------------------------------------------ pipeline
+# moving_fn scripts answered by a window aggregate, by exact script text
+# (MovingFunctions.java); any other script raises instead of being guessed.
+MOVING_FUNCTIONS = {
+    "MovingFunctions.max(values)": F.max,
+    "MovingFunctions.min(values)": F.min,
+    "MovingFunctions.sum(values)": F.sum,
+    "MovingFunctions.unweightedAvg(values)": F.avg,
+}
+
+
 def _apply_pipeline(out: DataFrame, name: str, spec: dict, order: list[str]) -> DataFrame:
     """Second-pass ops over the bucket DF (reg SearchModule.java:479-568).
     Buckets are processed in natural key order, like ES histogram order."""
@@ -787,15 +797,14 @@ def _apply_pipeline(out: DataFrame, name: str, spec: dict, order: list[str]) -> 
     if kind == "moving_fn":
         window = int(b["window"])
         # ES window is the PRECEDING window excluding current by default shift=0
-        fn = b.get("script", "MovingFunctions.unweightedAvg(values)")
-        wf = w.rowsBetween(-window, -1)
-        if "max" in fn:
-            return out.withColumn(name, F.max(src).over(wf))
-        if "min" in fn:
-            return out.withColumn(name, F.min(src).over(wf))
-        if "sum" in fn:
-            return out.withColumn(name, F.sum(src).over(wf))
-        return out.withColumn(name, F.avg(src).over(wf))
+        script = b.get("script", "MovingFunctions.unweightedAvg(values)")
+        fn = MOVING_FUNCTIONS.get(script) if isinstance(script, str) else None
+        if fn is None:
+            raise ValueError(
+                f"moving_fn script {script!r} is not supported; use one of "
+                f"{sorted(MOVING_FUNCTIONS)}"
+            )
+        return out.withColumn(name, fn(src).over(w.rowsBetween(-window, -1)))
     if kind in ("avg_bucket", "sum_bucket", "min_bucket", "max_bucket", "stats_bucket"):
         wa = Window.partitionBy()
         fns = {

@@ -39,7 +39,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..functions import analysis, codec, scoring
-from ..sources.segment_store import SegmentMeta, SegmentStore, read_spark
+from ..sources.segment_store import SegmentMeta, SegmentStore, read_spark, write_local
 
 BLOCK_BITS = 12
 BLOCK_RANGE = 1 << BLOCK_BITS  # ordinals per postings block
@@ -352,6 +352,20 @@ def _encode_partition(it):
         )
 
 
+def _check_pack_budget(n_docs: int, max_dl: int) -> None:
+    """A segment must fit the packed occurrence key: 32-bit ordinals and
+    20-bit positions (see the PACK_* layout)."""
+    if n_docs > (1 << PACK_ORD_BITS):
+        raise ValueError(
+            f"segment has {n_docs} docs > 2^{PACK_ORD_BITS} ordinal budget; "
+            "raise build_index(n_slices=...) so each slice fits one segment"
+        )
+    if max_dl > (1 << PACK_POS_BITS):
+        raise ValueError(
+            f"doc with {max_dl} tokens exceeds the 2^{PACK_POS_BITS} position budget"
+        )
+
+
 def build_segment(
     spark: SparkSession,
     store: SegmentStore,
@@ -397,16 +411,7 @@ def build_segment(
     n_docs = int(sums[0])
     nf = len(INDEXED_FIELDS)
     field_sum_dl = {f: int(sums[1 + i]) for i, f in enumerate(INDEXED_FIELDS)}
-    max_dl = max(int(sums[1 + nf + i]) for i in range(nf))
-    if n_docs > (1 << PACK_ORD_BITS):
-        raise ValueError(
-            f"segment has {n_docs} docs > 2^{PACK_ORD_BITS} ordinal budget; "
-            "raise build_index(n_slices=...) so each slice fits one segment"
-        )
-    if max_dl > (1 << PACK_POS_BITS):
-        raise ValueError(
-            f"doc with {max_dl} tokens exceeds the 2^{PACK_POS_BITS} position budget"
-        )
+    _check_pack_budget(n_docs, max(int(sums[1 + nf + i]) for i in range(nf)))
 
     # ONE shuffle for the whole postings build, TWO columns per occurrence:
     # (term, packed) where packed = fid|ordinal|pos|norm (see PACK_* layout).
@@ -517,6 +522,123 @@ def build_segment(
         field_sum_dl=field_sum_dl,
     )
     return meta
+
+
+# footer schemas of the Spark build's term dictionary and dv block index
+TERM_STATS_SCHEMA = T.StructType(
+    [
+        T.StructField("field", T.StringType()),
+        T.StructField("term", T.StringType()),
+        T.StructField("df", T.LongType()),
+    ]
+)
+DV_STATS_SCHEMA = T.StructType(
+    [
+        T.StructField("col", T.StringType(), nullable=False),
+        T.StructField("val", T.LongType()),
+        T.StructField("bk", T.IntegerType()),
+    ]
+)
+
+
+def build_segment_local(store: SegmentStore, rows: "pa.Table", slice_id: str) -> SegmentMeta:
+    """Driver-side twin of `build_segment` for a batch small enough to hold
+    in driver memory, such as an update batch: the same four tables, row for
+    row and with the same footer schemas, written by `write_local` with no
+    Spark job.
+
+    It reuses the Spark build's parts: ordinals in (conv_id, turn_idx) order,
+    `analysis.analyze` (the driver twin of `analysis.tokens`) for tokens and
+    doc lengths, `scoring.int_to_byte4` for norms, the PACK_* occurrence
+    layout, and `_encode_partition` fed the whole batch as one partition.
+    `rows` holds DOC_COLS; its Arrow schema (types and nullability) gives the
+    docs table's."""
+    import time as _time
+
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    from pyspark.sql.pandas.types import from_arrow_schema
+
+    t_start = _time.perf_counter()
+    seg_id = store.new_segment_id()
+    rows = rows.select(DOC_COLS).sort_by([("conv_id", "ascending"), ("turn_idx", "ascending")])
+    n_docs = rows.num_rows
+    ordinal = np.arange(n_docs, dtype=np.int64)
+    docs = {"ordinal": pa.array(ordinal), **{c: rows[c] for c in DOC_COLS}}
+    docs_schema = [T.StructField("ordinal", T.LongType()), *from_arrow_schema(rows.schema)]
+    terms: list[str] = []
+    packed: list[np.ndarray] = []
+    field_sum_dl, max_dl = {}, 0
+    for fid, f in enumerate(INDEXED_FIELDS):
+        toks = [None if v is None else analysis.analyze(v) for v in rows[f].to_pylist()]
+        dl = [None if t is None else len(t) for t in toks]
+        norm = [None if n is None else scoring.int_to_byte4(n) for n in dl]
+        docs[dl_col(f)] = pa.array(dl, pa.int32())
+        docs[norm_col(f)] = pa.array(norm, pa.int32())
+        # size() of a NULL token array is NULL; the norm's CASE is always nullable
+        docs_schema += [
+            T.StructField(dl_col(f), T.IntegerType(), rows.schema.field(f).nullable),
+            T.StructField(norm_col(f), T.IntegerType()),
+        ]
+        lens = np.array([n or 0 for n in dl], dtype=np.int64)
+        field_sum_dl[f] = int(lens.sum())
+        max_dl = max(max_dl, int(lens.max(initial=0)))
+        starts = np.repeat(np.cumsum(lens) - lens, lens)
+        pos = np.arange(len(starts), dtype=np.int64) - starts
+        terms += [t for ts in toks if ts for t in ts]
+        packed.append(
+            (fid << PACK_FID_SHIFT)
+            + (np.repeat(ordinal, lens) << PACK_ORD_SHIFT)
+            + (pos << PACK_NORM_BITS)
+            + np.repeat(np.array([n or 0 for n in norm], dtype=np.int64), lens)
+        )
+    _check_pack_budget(n_docs, max_dl)
+    # keyword subfields: the raw value at pos 0 with norm 0, as in build_segment
+    for j, f in enumerate(KEYWORD_FIELDS):
+        present = pc.is_valid(rows[f]).to_numpy(zero_copy_only=False)
+        terms += rows[f].filter(present).to_pylist()
+        packed.append(((len(INDEXED_FIELDS) + j) << PACK_FID_SHIFT) + (ordinal[present] << PACK_ORD_SHIFT))
+    occ = pa.record_batch(
+        [pa.array(terms, pa.string()), pa.array(np.concatenate(packed), pa.int64())],
+        names=["term", "packed"],
+    )
+    postings = pa.Table.from_batches(list(_encode_partition(iter([occ]))), schema=_POSTINGS_ARROW)
+    dfs = postings.group_by(["field", "term"]).aggregate([("n", "sum")])
+    term_stats = pa.table({"field": dfs["field"], "term": dfs["term"], "df": dfs["n_sum"]}).sort_by(
+        [("field", "ascending"), ("term", "ascending")]
+    )
+    dv = []
+    for c in NUMERIC_DV_COLS:
+        present = pc.is_valid(rows[c]).to_numpy(zero_copy_only=False)
+        vals = rows[c].filter(present).cast(pa.int64())
+        bks = pa.array(ordinal[present] >> BLOCK_BITS, pa.int32())
+        dv.append(pa.table({"col": pa.array([c] * len(vals), pa.string()), "val": vals, "bk": bks}))
+    dv = (
+        pa.concat_tables(dv)
+        .group_by(["col", "val", "bk"])
+        .aggregate([])
+        .sort_by([("col", "ascending"), ("val", "ascending"), ("bk", "ascending")])
+    )
+
+    write_local(store.docs_path(seg_id), pa.table(docs), T.StructType(docs_schema))
+    write_local(store.postings_path(seg_id), postings, POSTINGS_SCHEMA)
+    write_local(store.term_stats_path(seg_id), term_stats, TERM_STATS_SCHEMA)
+    write_local(store.dv_stats_path(seg_id), dv, DV_STATS_SCHEMA)
+    return SegmentMeta(
+        segment_id=seg_id,
+        n_docs=n_docs,
+        sum_dl=field_sum_dl["text"],
+        slice_id=slice_id,
+        tier_bytes=store.dir_size(seg_id),
+        metrics={
+            "partitions": 1,
+            "posting_fields": list(POSTING_FIELDS),
+            "partition_rows": [n_docs],
+            "build_sec": round(_time.perf_counter() - t_start, 3),
+        },
+        field_sum_dl=field_sum_dl,
+    )
 
 
 def build_index(

@@ -25,12 +25,10 @@ readable (Iceberg-style time travel).
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
-from ..sources.segment_store import SegmentMeta, SegmentStore, read_spark
+from ..sources.segment_store import SegmentMeta, SegmentStore, read_point, read_spark
 from .index_build import DOC_COLS, build_segment
 
 FLOOR_BYTES = 2 * 1024 * 1024  # MergePolicyConfig.java:123 floor_segment 2mb
@@ -84,28 +82,13 @@ def merge_segments(
     # positional-delete hygiene: the merged segment purged its inputs'
     # deletes, so a delete file whose rows all target merged-away segments is
     # dead weight — at scale they'd accumulate forever. Keep only files still
-    # referencing a live segment (small parquet point reads).
-    live_ids = {s.segment_id for s in new_live}
-    kept_dels = []
-    if snap.delete_files:
-        # one job over ALL delete files (not one per file — with many
-        # accumulated files, per-file jobs make commit latency linear in
-        # file count, the very situation this pruning targets)
-        refs = (
-            read_spark(spark, *snap.delete_files)
-            .select(F.input_file_name().alias("file"), "segment")
-            .where(F.col("segment").isin(sorted(live_ids)))
-            .select("file")
-            .distinct()
-            .collect()
-        )
-        # input_file_name returns part-file URIs inside each delete dir;
-        # match on the dir's (uuid-unique) basename as a path component
-        alive = {r.file for r in refs}
-        kept_dels = [
-            f for f in snap.delete_files
-            if any(f"/{os.path.basename(f.rstrip('/'))}/" in a for a in alive)
-        ]
+    # referencing a live segment: each file's `segment` column is read on the
+    # driver with the live ids pushed down, no Spark job.
+    live_ids = sorted(s.segment_id for s in new_live)
+    kept_dels = [
+        f for f in snap.delete_files
+        if read_point(f, ["segment"], [[("segment", "in", live_ids)]]).num_rows
+    ]
     new_snap = store.commit(
         new_live,
         "merge",

@@ -17,12 +17,16 @@ InternalEngine.java:889-968) AND of Iceberg snapshots for time-travel:
     deletes/<id>.parquet         -> (segment string, ordinal long) positional
                                     deletes (Lucene liveDocs analog)
 
-Every table is a Spark-written parquet directory. Reads come in two kinds
-(see the bottom of this module): the tables a query scans in bulk (docs,
-postings, delete files) are Spark DataFrames whose schema comes from the
-parquet footer, and the small sorted tables a query only seeks into (term
-dictionary, dv block index, a few docs rows by ordinal) are read on the
-driver with pyarrow, pruned by row-group min/max statistics.
+Every table is a parquet directory in Spark's layout (`part-*.parquet`
+data files plus a `_SUCCESS` marker, the Spark schema in each footer). Two
+writers produce it: Spark's DataFrame writer for builds and merges, and
+`write_local` for the tables of a small update batch, which are built on the
+driver with pyarrow. Reads come in two kinds (see the bottom of this module):
+the tables a query scans in bulk (docs, postings, delete files) are Spark
+DataFrames whose schema comes from the parquet footer, and the small sorted
+tables a query only seeks into (term dictionary, dv block index, a few docs
+rows by ordinal or key) are read on the driver with pyarrow, pruned by
+row-group min/max statistics.
 
 Commit protocol (mirrors Iceberg): write all data files, write the new
 snapshot json, then atomically swap CURRENT via os.rename. A killed build
@@ -319,3 +323,19 @@ def read_point(path: str, columns: list[str], filters: list) -> pa.Table:
     into the term dictionary, the dv block index, or the docs rows of a few
     ordinals: no Spark job, no task scheduling."""
     return pq.read_table(_data_files(path), columns=columns, filters=filters)
+
+
+def write_local(path: str, table: pa.Table, spark_schema: StructType) -> None:
+    """Driver-side write of one small table in the layout Spark's writer
+    leaves: one `part-00000.parquet` data file and a `_SUCCESS` marker, with
+    `spark_schema` stored under `SPARK_SCHEMA_KEY`. `footer_schema`,
+    `read_spark`, `read_point` and merges read it like a Spark-written table.
+    Columns are cast to the Arrow form of `spark_schema` (timestamps as UTC
+    microseconds), so Spark reads back exactly the declared types."""
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    table = table.select(spark_schema.names).cast(to_arrow_schema(spark_schema))
+    table = table.replace_schema_metadata({SPARK_SCHEMA_KEY: spark_schema.json().encode()})
+    os.makedirs(path, exist_ok=True)
+    pq.write_table(table, os.path.join(path, "part-00000.parquet"))
+    open(os.path.join(path, "_SUCCESS"), "w").close()

@@ -126,3 +126,39 @@ def test_significant_text(spark, transcripts):
     assert all(r.score > 0 for r in out)
     scores = [r.score for r in out]
     assert scores == sorted(scores, reverse=True)
+
+
+def _moving_fn(transcripts, script):
+    return aggs.aggregate(
+        transcripts,
+        {
+            "aggs": {
+                "turn": {
+                    "histogram": {"field": "turn_idx", "interval": 1},
+                    "aggs": {"mov": {"moving_fn": {"buckets_path": "_count", "window": 2, "script": script}}},
+                }
+            }
+        },
+    )
+
+
+def test_moving_fn_exact_scripts(spark, transcripts):
+    counts = [r.doc_count for r in _moving_fn(transcripts, "MovingFunctions.sum(values)").orderBy("turn").collect()]
+    for script, fn in [
+        ("MovingFunctions.max(values)", max),
+        ("MovingFunctions.min(values)", min),
+        ("MovingFunctions.sum(values)", sum),
+        ("MovingFunctions.unweightedAvg(values)", lambda w: sum(w) / len(w)),
+    ]:
+        got = [r.mov for r in _moving_fn(transcripts, script).orderBy("turn").collect()]
+        want = [None] + [fn(counts[max(0, i - 2) : i]) for i in range(1, len(counts))]
+        assert got == pytest.approx(want), script
+
+
+@pytest.mark.parametrize(
+    "script",
+    ["MovingFunctions.stdDev(values, MovingFunctions.unweightedAvg(values))", "MovingFunctions.ewma(values, 0.3)", "values.max()"],
+)
+def test_moving_fn_unknown_script_raises(spark, transcripts, script):
+    with pytest.raises(ValueError, match="moving_fn script"):
+        _moving_fn(transcripts, script)

@@ -11,11 +11,21 @@ Invariants (SURVEY.md §5.3-5.4):
 
 from __future__ import annotations
 
+import datetime as dt
+import json
+import time
+
+import pandas as pd
+import pyarrow.parquet as pq
 import pytest
+from conftest import spark_jobs
 from pyspark.sql import functions as F
 
+from elasticsearch_spark.functions import analysis
 from elasticsearch_spark.operators import index_build, merge, topk, update
 from elasticsearch_spark.plans import query_dsl as Q
+from elasticsearch_spark.sources import segment_store
+from elasticsearch_spark.sources import transcripts as TR
 
 KEYS = ["conv_id", "turn_idx"]
 Q_OR = {"match": {"text": "spark query fast"}}
@@ -73,6 +83,26 @@ class TestMerge:
         assert [r.ordinal for r in rows] == list(range(len(rows)))
         keys = [(r.conv_id, r.turn_idx) for r in rows]
         assert keys == sorted(keys)
+
+    def test_merge_drops_delete_files_of_merged_segments(self, spark, transcripts, tmp_path):
+        store = index_build.build_index(spark, transcripts, str(tmp_path), n_slices=3, partitions=2)
+        a, b, c = (s.segment_id for s in store.snapshot().segments)
+
+        def delete_first_doc_of(seg_id):
+            r = segment_store.read_spark(spark, store.docs_path(seg_id)).orderBy("ordinal").first()
+            n, _ = update.delete_by_query(
+                spark, store, f"conv_id = '{r.conv_id}' and turn_idx = {r.turn_idx}"
+            )
+            assert n == 1
+            return store.snapshot().delete_files[-1]
+
+        dead, kept = delete_first_doc_of(a), delete_first_doc_of(c)
+        n_live = update.read_snapshot_table(spark, store).count()
+        merge.merge_segments(spark, store, [a, b], partitions=2)
+        snap = store.snapshot()
+        # only a merged-away segment was named in `dead`; `kept` names the live c
+        assert snap.delete_files == [kept] and dead != kept
+        assert update.read_snapshot_table(spark, store).count() == n_live
 
     def test_pick_merges_tiering(self):
         from elasticsearch_spark.sources.segment_store import SegmentMeta
@@ -208,3 +238,170 @@ def test_expire_snapshots_vacuum(spark, transcripts, store4):
     from elasticsearch_spark.operators import topk
 
     assert topk.search_indexed(spark, store4, Q_OR, k=5).count() == 5
+
+
+# ---------------------------------------------------------- driver-side path
+UPDATE_DDL = "conv_id string, turn_idx int, role string, text string, tool string, ts timestamp"
+
+
+def _footer(path):
+    meta = pq.read_metadata(segment_store._data_files(path)[0]).metadata
+    return json.loads(meta[segment_store.SPARK_SCHEMA_KEY])
+
+
+def _table_rows(spark, path):
+    return sorted(map(tuple, segment_store.read_spark(spark, path).collect()), key=repr)
+
+
+def test_build_segment_local_matches_spark_build(spark, transcripts, tmp_path):
+    odd = spark.createDataFrame(
+        [
+            ("conv_x", 0, "user", "İstanbul ΑΣ ½ x² café", "", dt.datetime(2024, 1, 1, 0, 0, 0, 123456)),
+            ("conv_x", 1, "tool", None, "search", dt.datetime(2024, 1, 1, 0, 0, 1, 1)),
+            ("conv_x", 2, "assistant", "", "", None),
+            ("conv_x", 3, None, "a" * 300 + " tail", "code", dt.datetime(2024, 1, 1, 0, 0, 2, 999999)),
+        ],
+        UPDATE_DDL,
+    )
+    slice_df = transcripts.orderBy(*KEYS).limit(300).unionByName(odd)
+    assert _assert_local_build_matches(spark, slice_df, tmp_path) == 304
+
+
+def test_build_segment_local_matches_spark_build_over_two_blocks(spark, tmp_path):
+    n = index_build.BLOCK_RANGE + 300
+    slice_df = TR.generate_transcripts(spark, n, seed=5, partitions=2)
+    assert _assert_local_build_matches(spark, slice_df, tmp_path) == n
+
+
+def _assert_local_build_matches(spark, slice_df, tmp_path):
+    """Build `slice_df` both ways and compare the four tables; returns n_docs."""
+    store = segment_store.SegmentStore(str(tmp_path))
+    spark_meta = index_build.build_segment(spark, store, slice_df, "s", partitions=2)
+    local_meta = index_build.build_segment_local(store, slice_df.toArrow(), "s")
+    assert (local_meta.n_docs, local_meta.field_sum_dl) == (spark_meta.n_docs, spark_meta.field_sum_dl)
+    for table in ("docs_path", "postings_path", "term_stats_path", "dv_stats_path"):
+        want = getattr(store, table)(spark_meta.segment_id)
+        got = getattr(store, table)(local_meta.segment_id)
+        assert _footer(got) == _footer(want), table
+        assert _table_rows(spark, got) == _table_rows(spark, want), table
+    return local_meta.n_docs
+
+
+def test_analyze_matches_spark_tokens(spark):
+    texts = [
+        "İstanbul ΑΣ ½ x² café",
+        "Hello, World! don't STOP-me 42x",
+        "ΣΊΣΥΦΟΣ straße ǅemal ﬁne",
+        "日本語 テキスト 123",
+        "",
+        "a" * 300,
+    ]
+    df = spark.createDataFrame(pd.DataFrame({"t": texts}))
+    got = [list(r[0]) for r in df.select(analysis.tokens("t")).collect()]
+    assert got == [analysis.analyze(t) for t in texts]
+
+
+def test_small_update_runs_on_driver(spark, transcripts, store4):
+    keys = transcripts.orderBy(*KEYS).select(*KEYS).limit(2).collect()
+    batch = pd.DataFrame(
+        {
+            "conv_id": [keys[0].conv_id, keys[1].conv_id, "conv_new"],
+            "turn_idx": [keys[0].turn_idx, keys[1].turn_idx, 0],
+            "role": [None, "system", "user"],
+            "text": ["driver side text", None, "inserted turn"],
+            "tool": [None, "", "x"],
+            "ts": [pd.Timestamp("2025-01-02 03:04:05.678901"), None, None],
+        }
+    )
+    upd = spark.createDataFrame(batch, UPDATE_DDL)
+    before_rows = update.read_snapshot_table(spark, store4).orderBy(*KEYS).limit(2).collect()
+    res, jobs = spark_jobs(
+        spark,
+        lambda: update.apply_updates(spark, store4, upd, req_old_source=True, req_new_source=True),
+    )
+    assert jobs <= 1
+    assert (res.n_updated, res.n_inserted) == (2, 1)
+    (old, new), image_jobs = spark_jobs(
+        spark, lambda: (res.old_source.collect(), res.new_source.collect())
+    )
+    assert image_jobs == 0
+    assert old == before_rows
+    cur = update.read_snapshot_table(spark, store4)
+    want = cur.where(
+        "conv_id = 'conv_new' or " + " or ".join(
+            f"(conv_id = '{k.conv_id}' and turn_idx = {k.turn_idx})" for k in keys
+        )
+    ).orderBy(*KEYS).collect()
+    assert new == want and len(new) == 3
+    # partial-doc merge: null columns keep the old value
+    assert new[0].text == "driver side text" and new[0].role == before_rows[0].role
+    assert new[0].ts == dt.datetime(2025, 1, 2, 3, 4, 5, 678901)
+    assert (new[1].role, new[1].text, new[1].tool) == ("system", before_rows[1].text, "")
+    hits = topk.search_indexed(spark, store4, {"match": {"text": "driver side"}}, k=3).collect()
+    assert (hits[0].conv_id, hits[0].turn_idx) == (keys[0].conv_id, keys[0].turn_idx)
+    assert cur.count() == transcripts.count() + 1
+
+
+def test_duplicate_keys_raise_on_both_paths(spark, store4):
+    sid = store4.current_snapshot_id()
+    small = spark.createDataFrame(
+        pd.DataFrame({"conv_id": ["conv_000000"] * 2, "turn_idx": [0, 0], "text": ["first", "second"]})
+    )
+    with pytest.raises(ValueError, match="more than once"):
+        update.apply_updates(spark, store4, small)
+    big = spark.range(update.LOCAL_UPDATE_MAX_ROWS + 1).select(
+        F.when(F.col("id") < 2, "conv_000000").otherwise(F.concat(F.lit("k"), F.col("id").cast("string"))).alias("conv_id"),
+        F.lit(0).alias("turn_idx"),
+        F.lit("text").alias("text"),
+    )
+    with pytest.raises(ValueError, match="more than once"):
+        update.apply_updates(spark, store4, big)
+    assert store4.current_snapshot_id() == sid
+
+
+def test_update_by_query_over_driver_cap_takes_spark_path(spark, transcripts, tmp_path, monkeypatch):
+    # a small cap sends this batch down the Spark path; the real cap's
+    # batches would make the test minutes long
+    store = index_build.build_index(spark, transcripts, str(tmp_path), partitions=2)
+    n = transcripts.count()
+    monkeypatch.setattr(update, "LOCAL_UPDATE_MAX_ROWS", n - 1)
+    pre = update.read_snapshot_table(spark, store).orderBy(*KEYS).limit(10).collect()
+    res, jobs = spark_jobs(
+        spark,
+        lambda: update.update_by_query(
+            spark, store, "true", {"tool": "'bulk'"}, partitions=2,
+            req_old_source=True, req_new_source=True,
+        ),
+    )
+    assert jobs > 1  # the Spark joins and build, not the driver path
+    assert (res.n_updated, res.n_inserted) == (n, 0)
+    assert res.old_source.collect() == pre
+    assert [r.asDict() for r in res.new_source.collect()] == [r.asDict() | {"tool": "bulk"} for r in pre]
+    cur = update.read_snapshot_table(spark, store)
+    assert cur.count() == n and cur.where("tool = 'bulk'").count() == n
+
+
+def test_small_update_keeps_ts_in_repeated_dst_hour(spark, tmp_path, monkeypatch):
+    # 05:30 and 06:30 UTC on 2024-11-03 are both 01:30 in New York, where
+    # the clocks fall back that night
+    micros = [1730611800000000, 1730615400000000]
+    corpus = spark.createDataFrame(
+        [("conv_dst", i, "user", f"turn {i}", "", None) for i in range(2)], UPDATE_DDL
+    ).withColumn("ts", F.timestamp_micros(F.element_at(F.array(*map(F.lit, micros)), F.col("turn_idx") + 1)))
+    store = index_build.build_index(spark, corpus, str(tmp_path), partitions=2)
+    monkeypatch.setenv("TZ", "America/New_York")
+    time.tzset()
+    try:
+        res = update.update_by_query(
+            spark, store, "true", {"tool": "'x'"}, req_old_source=True, req_new_source=True
+        )
+    finally:
+        monkeypatch.undo()
+        time.tzset()
+    assert res.n_updated == 2
+
+    def ts_micros(df):
+        return [r[0] for r in df.orderBy("turn_idx").select(F.unix_micros("ts")).collect()]
+
+    assert ts_micros(update.read_snapshot_table(spark, store)) == micros
+    assert ts_micros(res.old_source) == micros and ts_micros(res.new_source) == micros
