@@ -1,14 +1,17 @@
-"""Text analysis: the `standard` analyzer chain, Spark-first.
+"""Text analysis: the `standard` analyzer chain.
 
 Reference semantics (cited into /root/reference):
   - default analyzer is `standard` (index/analysis/AnalysisRegistry.java:550-556)
   - StandardAnalyzerProvider.java:32-40: StandardTokenizer (UAX#29 word break)
     + lowercase filter; stopword set EMPTY by default; max_token_length 255.
 
-Spark mapping: tokenization stays JVM-side via `regexp_extract_all` over a
-Unicode letter/number class — whole-stage-codegen friendly, no Python in the
-hot path. The same regex (RE2 dialect) backs the DuckDB oracle SQL so both
-engines tokenize identically.
+Three twins of one tokenizer: lowercase, then maximal runs of Unicode
+letters and numbers.
+  * `analyze` (Python) tokenizes the index: every segment build runs it in
+    its Spark tasks or on the driver, and query strings go through it too.
+  * `tokens` (JVM `regexp_extract_all`) tokenizes for the logical plan.
+  * `tokens_sql` (RE2) tokenizes for the DuckDB oracle.
+Tests check `analyze` == `tokens` over the fixture corpora.
 
 Deliberate deviation (documented): UAX#29 has extra rules for keeping
 mid-word apostrophes/colon in some scripts and splitting on script
@@ -20,6 +23,8 @@ whole (none exist in the corpora; property-tested as absent).
 """
 
 from __future__ import annotations
+
+import re
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
@@ -47,28 +52,14 @@ def tokens_sql(text_expr: str, dialect: str = "duckdb") -> str:
     return f"regexp_extract_all(lower({text_expr}), '{rx}')"
 
 
+# Python `re` lacks \p classes: `[^\W_]` matches exactly the characters
+# str.isalnum() accepts (letters and numbers), TOKEN_REGEX_JAVA's class.
+_TOKEN_RE = re.compile(r"[^\W_]+")
+
+
 def analyze(text: str) -> list[str]:
-    """Driver-side analyzer for query strings (mirrors tokens()).
-
-    Python `re` lacks \\p classes; use the equivalent str.isalnum() walk so the
-    query-side analysis agrees with the executor-side regex on Unicode.
-    """
-    out: list[str] = []
-    cur: list[str] = []
-    for ch in text.lower():
-        if ch.isalnum():
-            cur.append(ch)
-        elif cur:
-            out.append("".join(cur))
-            cur = []
-    if cur:
-        out.append("".join(cur))
-    return out
-
-
-def token_count(text: Column | str) -> Column:
-    """Doc length (number of tokens) — the BM25 `dl` before norm quantization."""
-    return F.size(tokens(text))
+    """Python twin of `tokens()`: the index's and the query strings' analyzer."""
+    return _TOKEN_RE.findall(text.lower())
 
 
 def wildcard_regex(value: str) -> str:
@@ -78,8 +69,6 @@ def wildcard_regex(value: str) -> str:
     only punctuation escapes, valid in Java regex (Spark rlike), RE2, and
     DuckDB alike — the one translation shared by engine, oracle, and
     percolate so they can never diverge."""
-    import re
-
     return "^" + "".join(
         ".*" if c == "*" else "." if c == "?" else re.escape(c) for c in value
     ) + "$"

@@ -159,12 +159,13 @@ def terminate_after_scan(
     keys. Spark packs multiple files into a scan partition in SIZE order (not
     key order), which breaks that prefix property — so the scan is built as a
     union of per-FILE reads: each docs file is key-sorted with a disjoint key
-    range (assign_ordinals range-partitions + sorts before writing), each
-    union leg's partitions contain only that file's splits, and the delete
-    anti-join is broadcast so no shuffle disturbs the ordering. Per-file
-    prefix + coordinator orderBy().limit(n) == the global first n matching
-    docs by (conv_id, turn_idx), deterministically. (At a 100 TB file count,
-    group files into key-ordered buckets instead of one leg per file.)
+    range (the build range-partitions by key and each task writes one sorted
+    part file), each union leg's partitions contain only that file's splits,
+    and the delete anti-join is broadcast so no shuffle disturbs the
+    ordering. Per-file prefix + coordinator orderBy().limit(n) == the global
+    first n matching docs by (conv_id, turn_idx), deterministically. (At a
+    100 TB file count, group files into key-ordered buckets instead of one
+    leg per file.)
     `batch_counter` (a Spark accumulator) counts consumed Arrow batches.
     """
     import glob

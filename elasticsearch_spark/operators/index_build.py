@@ -1,24 +1,29 @@
 """Inverted-index build: transcripts DataFrame -> segment tables.
 
-Spark shape (SURVEY.md §3.2): tokenize (JVM regex) -> posexplode ->
-(term, packed) two-column shuffle hash-keyed by (term, fid|block) -> columnar
-dictionary-encode + int-sort + delta+varbyte encode inside one Arrow kernel
--> write term-clustered segment parquet + manifest checkpoint.
+Shape (SURVEY.md §3.2): a segment is built where its documents are, like
+Lucene's per-thread segment writer and ES's per-shard indexing, and no token
+occurrence crosses a shuffle. `build_segment` range-partitions the slice by
+(conv_id, turn_idx) and each Spark task runs the pyarrow/numpy encoder
+(`_build_part`) over its own key range: analyze -> (term, packed) occurrence arrays -> columnar sort
+-> delta+varbyte blocks -> one docs and one postings part file. The driver
+sums the parts' term counts and dv rows into one sorted term dictionary and
+one dv block index. `build_segment_local` runs the same encoder once, on the
+driver, for a batch small enough to hold there.
 
 Scale design decisions:
-  * Doc ordinals: dense per segment, assigned by range-repartition on the doc
-    key + per-partition row_number + broadcast partition offsets — stable
-    under repartitioning, never monotonically_increasing_id (SURVEY §7).
-  * Postings blocks are FIXED ORDINAL RANGES (BLOCK_RANGE ordinals), not fixed
-    posting counts: every encode group is <= BLOCK_RANGE rows, so a hot term
-    ("the", df=every doc) is automatically split across (term, block) shuffle
-    keys — the salted-key skew handling the north rule asks for, with the salt
-    being the block id, and block-max metadata stays exact after any merge.
-  * The shuffle carries TWO columns (term string + one packed int64) and NO
-    Spark-side sort: ordering happens columnar-side in the Arrow kernel
-    (np.lexsort over int arrays after dictionary-encoding terms), which is
-    far cheaper in memory bandwidth than UnsafeRow sorting — bandwidth is the
-    contended resource behind the north rule's scaling-efficiency gate.
+  * Doc ordinals follow key order within a segment. Each part's first
+    ordinal is a multiple of BLOCK_RANGE, computed from the per-partition
+    row counts, so no postings block spans two parts; ordinals therefore
+    have gaps between parts, and n_docs is the sum of the parts' rows.
+    Offsets derive from deterministic key ranges, never from
+    monotonically_increasing_id (SURVEY §7).
+  * Postings blocks are FIXED ORDINAL RANGES (BLOCK_RANGE ordinals), not
+    fixed posting counts: a hot term ("the", df=every doc) is one postings
+    row per block, and block-max metadata stays exact after any merge.
+  * A task holds its key range in memory (the Lucene RAM-buffer-then-flush
+    analog), so parts average at most MAX_LOCAL_ROWS rows; and each part
+    starts a new block, so a slice gets no more parts than the blocks its
+    rows fill (ceil(n / BLOCK_RANGE)), however much parallelism is asked.
   * A segment is the unit of resumability: one committed snapshot per input
     slice (ES translog-checkpoint analog, Checkpoint.java:43-106); a killed
     build resumes by skipping slice_ids already in the manifest.
@@ -31,39 +36,47 @@ bound for the block's best score at query time.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+import time
+from typing import NamedTuple
 
+import numpy as np
 import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import from_arrow_schema, to_arrow_schema
 
 from ..functions import analysis, codec, scoring
-from ..sources.segment_store import SegmentMeta, SegmentStore, read_spark, write_local
+from ..sources.segment_store import SegmentMeta, SegmentStore, write_local
 
 BLOCK_BITS = 12
 BLOCK_RANGE = 1 << BLOCK_BITS  # ordinals per postings block
 
-# The postings shuffle carries exactly TWO columns per token occurrence:
-# (term string, packed int64). Packing (fid, ordinal, pos, norm) into one long
-# halves the UnsafeRow shuffle bytes vs separate columns (each column costs a
-# fixed 8-byte slot regardless of width) and turns the within-partition sort
-# into a string + single-long-prefix comparison — the shuffle-sort is the
-# memory-bandwidth-bound half of the build, so bytes here are the scaling
-# lever (north_rule ≥0.8 efficiency N -> 4N).
+# The most rows one Python process encodes at once: a driver-side update
+# batch, or one Spark task's key range. It bounds memory, not time: on a
+# 4-core host the driver-side update path's peak grew ~11 KB a row (~0.5 GB
+# at 50k rows) and was faster than the Spark path at every size up to 200k.
+MAX_LOCAL_ROWS = 50_000
+
+KEYS = ["conv_id", "turn_idx"]
+
+# The encoder sorts one int64 per token occurrence next to its term. Packing
+# (fid, ordinal, pos, norm) into one long makes that sort a lexsort over two
+# int arrays (term rank, packed), and run boundaries neighbour comparisons
+# of ints.
 #
 # Bit layout (high -> low): fid:4 | ordinal:32 | pos:20 | norm:8.
-#   * 4-bit field id: up to 8 indexed fields (sign bit must stay clear).
-#   * 32-bit ordinal: up to 4.3B docs per SEGMENT; a 10^12-turn build runs
-#     many slices (build_index n_slices), each its own segment. Guarded in
-#     build_segment.
+#   * 4-bit field id: up to 8 posting fields (sign bit must stay clear).
+#   * 32-bit ordinal: ordinals below 2^32 per SEGMENT; a 10^12-turn build
+#     runs many slices (build_index n_slices), each its own segment.
+#     Guarded in _encode_run.
 #   * 20-bit position: up to 1M tokens per doc (Lucene caps positions at
-#     2^31; transcript turns are far below both). Guarded in build_segment.
+#     2^31; transcript turns are far below both). Guarded in _encode_run.
 #   * 8-bit norm: the byte4-quantized doc length (already 0..255).
 # Sorting by (term, packed) yields (term, fid, bk, ordinal, pos) run order
-# because bk = ordinal >> BLOCK_BITS is a prefix of the ordinal bits; the
-# partition key (packed >> PACK_FIDBK_SHIFT) is exactly (fid, bk) — the
-# block id bk IS the salt for hot terms.
+# because bk = ordinal >> BLOCK_BITS is a prefix of the ordinal bits.
 PACK_NORM_BITS = 8
 PACK_POS_BITS = 20
 PACK_ORD_BITS = 32
@@ -107,7 +120,7 @@ def kw_field(f: str) -> str:
     return f + ".kw"
 
 
-# fid order in the packed shuffle key: analyzed fields first, then keyword
+# fid order in the packed occurrence key: analyzed fields first, then keyword
 # subfields. 4-bit fid budget (PACK layout below) => at most 8 total.
 POSTING_FIELDS = INDEXED_FIELDS + [kw_field(f) for f in KEYWORD_FIELDS]
 
@@ -120,26 +133,20 @@ def norm_col(f: str) -> str:
     return "norm" if f == "text" else f"norm_{f}"
 
 
-def _postings_arrow_schema():
-    import pyarrow as pa
-
-    return pa.schema(
-        [
-            ("field", pa.string()),
-            ("term", pa.string()),
-            ("bk", pa.int32()),
-            ("n", pa.int32()),
-            ("max_tf", pa.int32()),
-            ("min_dlq", pa.int64()),
-            ("docs", pa.binary()),
-            ("tfs", pa.binary()),
-            ("norms", pa.binary()),
-            ("poss", pa.binary()),
-        ]
-    )
-
-
-_POSTINGS_ARROW = _postings_arrow_schema()
+_POSTINGS_ARROW = pa.schema(
+    [
+        ("field", pa.string()),
+        ("term", pa.string()),
+        ("bk", pa.int32()),
+        ("n", pa.int32()),
+        ("max_tf", pa.int32()),
+        ("min_dlq", pa.int64()),
+        ("docs", pa.binary()),
+        ("tfs", pa.binary()),
+        ("norms", pa.binary()),
+        ("poss", pa.binary()),
+    ]
+)
 
 POSTINGS_SCHEMA = T.StructType(
     [
@@ -158,85 +165,32 @@ POSTINGS_SCHEMA = T.StructType(
         T.StructField("poss", T.BinaryType()),
     ]
 )
-
-# byte4-encode SQL (storage form of the norm, 1 byte/doc like Lucene norms)
-def _norm_byte_sql(dl: str = "dl") -> str:
-    return (
-        f"case when {dl} < 8 then {dl} else "
-        f"((shiftright(cast({dl} as bigint), cast(floor(log2(cast({dl} as double))) as int) - 3) & 7) "
-        f"| shiftleft(cast(floor(log2(cast({dl} as double))) as int) - 2, 3)) end"
-    )
-
-
-_NORM_BYTE_SQL = _norm_byte_sql("dl")
-
-
-def assign_ordinals(
-    df: DataFrame,
-    partitions: int | None = None,
-    counts_out: dict[int, int] | None = None,
-) -> DataFrame:
-    """Add a dense 0-based `ordinal` in (conv_id, turn_idx) order.
-
-    Range-partition + sort once, cache, collect only per-partition COUNTS
-    (tiny), then stamp ordinal = partition offset + running row index in a
-    zero-shuffle Arrow pass over the already-sorted cached partitions. A
-    row_number window here would shuffle AND re-sort the whole table a second
-    time (Spark cannot see the existing sort) — measured 3x slower. Never
-    monotonically_increasing_id: offsets derive from deterministic key ranges,
-    stable under recompute (SURVEY.md §7 hard part).
-    """
-    from pyspark import StorageLevel
-
-    p = partitions or df.sparkSession.sparkContext.defaultParallelism
-    base = (
-        df.repartitionByRange(p, "conv_id", "turn_idx")
-        .sortWithinPartitions("conv_id", "turn_idx")
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    counts = {
-        r._pid: r.c
-        for r in base.groupBy(F.spark_partition_id().alias("_pid"))
-        .agg(F.count(F.lit(1)).alias("c"))
-        .collect()
-    }
-    if counts_out is not None:
-        # per-partition row counts feed the manifest's lineage/metrics row
-        counts_out.update(counts)
-    offsets, acc = {}, 0
-    for pid in sorted(counts):
-        offsets[pid] = acc
-        acc += counts[pid]
-
-    out_schema = T.StructType(list(base.schema.fields) + [T.StructField("ordinal", T.LongType())])
-
-    def stamp(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from pyspark import TaskContext
-
-        off = offsets.get(TaskContext.get().partitionId(), 0)
-        for pdf in it:
-            n = len(pdf)
-            pdf = pdf.copy(deep=False)
-            pdf["ordinal"] = range(off, off + n)
-            off += n
-            yield pdf
-
-    return base.mapInPandas(stamp, schema=out_schema)
+TERM_STATS_SCHEMA = T.StructType(
+    [
+        T.StructField("field", T.StringType()),
+        T.StructField("term", T.StringType()),
+        T.StructField("df", T.LongType()),
+    ]
+)
+DV_STATS_SCHEMA = T.StructType(
+    [
+        T.StructField("col", T.StringType(), nullable=False),
+        T.StructField("val", T.LongType()),
+        T.StructField("bk", T.IntegerType()),
+    ]
+)
 
 
-def _encode_runs(term_of_run, codes: "np.ndarray", packed: "np.ndarray"):
+def _encode_runs(term_of_run, codes: np.ndarray, packed: np.ndarray):
     """Vectorized encode of occurrence arrays sorted by (term code, packed).
 
     Input arrays are one element per TOKEN OCCURRENCE — tf is the count of
-    adjacent duplicate ordinals, aggregated here instead of by a groupBy
-    upstream, saving a full shuffle of the exploded tokens. (fid, ordinal,
-    pos, norm) unpack from the single int64 (see PACK_* layout above). Run
-    boundaries come from neighbor comparison on two int arrays; term strings
+    adjacent duplicate ordinals. (fid, ordinal, pos, norm) unpack from the
+    single int64 (see PACK_* layout above). Run boundaries come from
+    neighbor comparison on two int arrays; term strings
     materialize only once per output block via `term_of_run(code)` — no
     per-occurrence Python objects anywhere.
     """
-    import numpy as np
-
     if not len(packed):
         return None
     fidbk = packed >> PACK_FIDBK_SHIFT  # (fid, bk) combined — the run key
@@ -307,57 +261,33 @@ def _encode_runs(term_of_run, codes: "np.ndarray", packed: "np.ndarray"):
     )
 
 
-def _encode_partition(it):
-    """Arrow kernel: one hash partition of (term, packed) occurrence rows ->
-    one output row per (field, term, block).
+def _encode_postings(terms: pa.Array, packed: np.ndarray) -> pa.Table:
+    """Occurrence arrays (term, packed) -> one postings row per
+    (field, term, block), in (term, fid, bk) order so parquet row-group
+    min/max stats prune term point-reads.
 
-    Replaces Spark's row-based UnsafeExternalSorter with a columnar sort:
-    terms dictionary-encode to int32 codes (hash-based Arrow C++ kernel), the
-    sort is np.lexsort over two int arrays (packed within lex-rank-of-term) —
-    far cheaper in memory bandwidth than comparing UnsafeRows, which is
-    exactly the resource the scaling rule is gated on. The partition is
-    materialized once (the Lucene RAM-buffer-then-flush analog); callers size
-    `partitions` so a partition fits executor memory — the same rule a real
-    cluster uses for sort-heavy stages. Output rows are emitted in (term lex
-    order, fid, bk) so parquet row-group min/max stats prune term point-reads.
-    """
-    import numpy as np
-    import pyarrow as pa
-    import pyarrow.compute as pc
-
-    batches = list(it)
-    if not batches:
-        return
-    tbl = pa.Table.from_batches(batches).combine_chunks()
-    del batches
-    denc = pc.dictionary_encode(tbl.column("term").combine_chunks())
+    Terms dictionary-encode to int codes (hash-based Arrow C++ kernel) and
+    the sort is np.lexsort over two int arrays (packed within lex-rank of
+    term): the big arrays never sort on strings."""
+    denc = pc.dictionary_encode(terms)
     codes = denc.indices.to_numpy().astype(np.int64)
     vocab = np.asarray(denc.dictionary.to_pylist(), dtype=object)
-    packed = tbl.column("packed").to_numpy()
-    del tbl, denc
-    # lexicographic rank per code: sort the (small) vocabulary once, then the
-    # big arrays sort purely on ints
+    # lexicographic rank per code: sort the (small) vocabulary once
     lexrank = np.empty(len(vocab), dtype=np.int64)
     lexrank[np.argsort(vocab, kind="stable")] = np.arange(len(vocab))
     order = np.lexsort((packed, lexrank[codes]))
-    codes, packed = codes[order], packed[order]
-    del order
-    out = _encode_runs(lambda c: vocab[c], codes, packed)
-    if out is None or not len(out):
-        return
-    # chunked emit keeps each Arrow batch bounded (hot-term blocks are big)
-    for lo in range(0, len(out), 65536):
-        yield pa.RecordBatch.from_pandas(
-            out.iloc[lo : lo + 65536], schema=_POSTINGS_ARROW, preserve_index=False
-        )
+    out = _encode_runs(lambda c: vocab[c], codes[order], packed[order])
+    if out is None:
+        return _POSTINGS_ARROW.empty_table()
+    return pa.Table.from_pandas(out, schema=_POSTINGS_ARROW, preserve_index=False)
 
 
-def _check_pack_budget(n_docs: int, max_dl: int) -> None:
-    """A segment must fit the packed occurrence key: 32-bit ordinals and
-    20-bit positions (see the PACK_* layout)."""
-    if n_docs > (1 << PACK_ORD_BITS):
+def _check_pack_budget(end_ordinal: int, max_dl: int) -> None:
+    """A segment must fit the packed occurrence key: ordinals below 2^32
+    and 20-bit positions (see the PACK_* layout)."""
+    if end_ordinal > (1 << PACK_ORD_BITS):
         raise ValueError(
-            f"segment has {n_docs} docs > 2^{PACK_ORD_BITS} ordinal budget; "
+            f"segment ordinals reach {end_ordinal} > 2^{PACK_ORD_BITS} ordinal budget; "
             "raise build_index(n_slices=...) so each slice fits one segment"
         )
     if max_dl > (1 << PACK_POS_BITS):
@@ -366,207 +296,21 @@ def _check_pack_budget(n_docs: int, max_dl: int) -> None:
         )
 
 
-def build_segment(
-    spark: SparkSession,
-    store: SegmentStore,
-    slice_df: DataFrame,
-    slice_id: str,
-    partitions: int | None = None,
-) -> SegmentMeta:
-    """Build one immutable segment (docs + postings) from a transcripts slice."""
-    import time as _time
+def _encode_run(rows: pa.Table, first: int):
+    """Encode one key range of a segment: `rows` (DOC_COLS) get ordinals
+    first, first+1, ... in (conv_id, turn_idx) order.
 
-    t_start = _time.perf_counter()
-    seg_id = store.new_segment_id()
-    part_counts: dict[int, int] = {}
-    docs = assign_ordinals(slice_df, partitions, counts_out=part_counts)
-    for f in INDEXED_FIELDS:
-        # dl NULL (field absent) stays NULL: absent fields contribute no
-        # postings and are excluded from the field's sum_dl, mirroring the
-        # logical path's corpus_stats (sum skips NULL token arrays).
-        docs = docs.withColumn(dl_col(f), analysis.token_count(f)).withColumn(
-            norm_col(f), F.expr(_norm_byte_sql(dl_col(f))).cast("int")
-        )
-    docs.persist()
-
-    extra_cols = [c for f in INDEXED_FIELDS for c in (dl_col(f), norm_col(f))]
-    # assign_ordinals output is already range-partitioned by (conv_id,
-    # turn_idx) == ordinal order; write directly (no extra shuffle/sample job),
-    # files stay ordinal-sorted for row-group pruning on fetch.
-    (
-        docs.select("ordinal", *DOC_COLS, *extra_cols)
-        .write.mode("overwrite")
-        .parquet(store.docs_path(seg_id))
-    )
-
-    # corpus stats first (cheap agg on the cached docs) — they double as the
-    # pack-width guard: a segment must fit the 32-bit ordinal / 20-bit
-    # position budget, else the caller must raise n_slices (each slice is its
-    # own segment with its own ordinal space).
-    sums = docs.agg(
-        F.count(F.lit(1)),
-        *[F.coalesce(F.sum(dl_col(f)), F.lit(0)) for f in INDEXED_FIELDS],
-        *[F.coalesce(F.max(dl_col(f)), F.lit(0)) for f in INDEXED_FIELDS],
-    ).first()
-    n_docs = int(sums[0])
-    nf = len(INDEXED_FIELDS)
-    field_sum_dl = {f: int(sums[1 + i]) for i, f in enumerate(INDEXED_FIELDS)}
-    _check_pack_budget(n_docs, max(int(sums[1 + nf + i]) for i in range(nf)))
-
-    # ONE shuffle for the whole postings build, TWO columns per occurrence:
-    # (term, packed) where packed = fid|ordinal|pos|norm (see PACK_* layout).
-    # Rows are hash-repartitioned by (term, fid|bk) and sorted by
-    # (term, packed); tf is the count of adjacent duplicate ordinals,
-    # aggregated inside the Arrow encoder (a groupBy here would add a second
-    # full shuffle for ~25% less shuffle volume — a loss). The bk bits of the
-    # partition key ARE the salt for hot terms: a term with df = all docs
-    # spreads over n_docs/BLOCK_RANGE keys (north_rule's salted-key skew
-    # handling), and block-max metadata stays exact. All indexed fields ride
-    # the same shuffle (fid is just high bits of packed), like Lucene's single
-    # per-segment terms dictionary.
-    occ = None
-    for fid, f in enumerate(INDEXED_FIELDS):
-        o = docs.select(
-            "ordinal",
-            F.col(norm_col(f)).alias("norm"),
-            F.posexplode(analysis.tokens(f)).alias("pos", "term"),
-        ).select(
-            "term",
-            (
-                F.lit(fid << PACK_FID_SHIFT)
-                + F.shiftleft(F.col("ordinal"), PACK_ORD_SHIFT)
-                + F.shiftleft(F.col("pos").cast("long"), PACK_NORM_BITS)
-                + F.col("norm").cast("long")
-            ).alias("packed"),
-        )
-        occ = o if occ is None else occ.unionByName(o)
-    # keyword subfields ride the SAME shuffle: one occurrence per doc, term =
-    # the raw value (KeywordFieldMapper indexes the exact bytes), pos=0 and
-    # norm=0 (norms disabled on keyword fields). Adds one row per doc per
-    # keyword field — negligible next to the text-token volume — and buys
-    # O(df) term/terms queries from the dictionary instead of docs scans.
-    for j, f in enumerate(KEYWORD_FIELDS):
-        fid = len(INDEXED_FIELDS) + j
-        o = docs.where(F.col(f).isNotNull()).select(
-            F.col(f).alias("term"),
-            (
-                F.lit(fid << PACK_FID_SHIFT)
-                + F.shiftleft(F.col("ordinal"), PACK_ORD_SHIFT)
-            ).alias("packed"),
-        )
-        occ = occ.unionByName(o)
-    p = partitions or spark.sparkContext.defaultParallelism
-    # NO Spark-side sort: the Arrow kernel dictionary-encodes + int-sorts the
-    # partition columnar-side (see _encode_partition), which measurably beats
-    # UnsafeExternalSorter on memory bandwidth — the scaling-rule resource.
-    postings = occ.repartition(
-        p, F.col("term"), F.shiftright(F.col("packed"), PACK_FIDBK_SHIFT)
-    ).mapInArrow(_encode_partition, schema=POSTINGS_SCHEMA)
-    # write straight from the encode pass: files are (term, fid, bk)-sorted
-    # within each hash partition, so parquet row-group min/max stats prune term
-    # scans; a range repartition here would re-run the whole encode chain to
-    # sample.
-    postings.write.mode("overwrite").parquet(store.postings_path(seg_id))
-
-    # term dictionary: (field, term, df) aggregated from the written postings
-    # (cheap columnar re-read of small columns) — query-time stats become a
-    # term-pruned point read instead of a per-query aggregation job.
-    written = read_spark(spark, store.postings_path(seg_id))
-    (
-        written.groupBy("field", "term")
-        .agg(F.sum("n").alias("df"))
-        .sortWithinPartitions("field", "term")
-        .write.mode("overwrite")
-        .parquet(store.term_stats_path(seg_id))
-    )
-
-    # numeric doc-value block index (see NUMERIC_DV_COLS): distinct
-    # (col, val, bk) from the cached docs — map-side partial aggregation
-    # shrinks the shuffle to ~n_distinct rows per block per partition, so
-    # this is a rounding error next to the postings shuffle.
-    dv = None
-    for c in NUMERIC_DV_COLS:
-        d = docs.where(F.col(c).isNotNull()).select(
-            F.lit(c).alias("col"),
-            F.col(c).cast("long").alias("val"),
-            F.shiftright(F.col("ordinal"), BLOCK_BITS).cast("int").alias("bk"),
-        )
-        dv = d if dv is None else dv.unionByName(d)
-    if dv is not None:
-        (
-            # range-cluster by (col, val) so each output file covers a value
-            # range and parquet min/max stats prune range reads; few files —
-            # the table is tiny relative to docs/postings.
-            dv.distinct()
-            .repartitionByRange(max(1, (partitions or 8) // 8), "col", "val")
-            .sortWithinPartitions("col", "val")
-            .write.mode("overwrite")
-            .parquet(store.dv_stats_path(seg_id))
-        )
-
-    docs.unpersist()
-    meta = SegmentMeta(
-        segment_id=seg_id,
-        n_docs=n_docs,
-        sum_dl=field_sum_dl["text"],
-        slice_id=slice_id,
-        tier_bytes=store.dir_size(seg_id),
-        metrics={
-            "partitions": p,
-            "posting_fields": list(POSTING_FIELDS),
-            # per-partition lineage/metrics (north rule): rows each input
-            # partition contributed, in partition-id order, + build wall time
-            "partition_rows": [part_counts[k] for k in sorted(part_counts)],
-            "build_sec": round(_time.perf_counter() - t_start, 3),
-        },
-        field_sum_dl=field_sum_dl,
-    )
-    return meta
-
-
-# footer schemas of the Spark build's term dictionary and dv block index
-TERM_STATS_SCHEMA = T.StructType(
-    [
-        T.StructField("field", T.StringType()),
-        T.StructField("term", T.StringType()),
-        T.StructField("df", T.LongType()),
-    ]
-)
-DV_STATS_SCHEMA = T.StructType(
-    [
-        T.StructField("col", T.StringType(), nullable=False),
-        T.StructField("val", T.LongType()),
-        T.StructField("bk", T.IntegerType()),
-    ]
-)
-
-
-def build_segment_local(store: SegmentStore, rows: "pa.Table", slice_id: str) -> SegmentMeta:
-    """Driver-side twin of `build_segment` for a batch small enough to hold
-    in driver memory, such as an update batch: the same four tables, row for
-    row and with the same footer schemas, written by `write_local` with no
-    Spark job.
-
-    It reuses the Spark build's parts: ordinals in (conv_id, turn_idx) order,
-    `analysis.analyze` (the driver twin of `analysis.tokens`) for tokens and
-    doc lengths, `scoring.int_to_byte4` for norms, the PACK_* occurrence
-    layout, and `_encode_partition` fed the whole batch as one partition.
-    `rows` holds DOC_COLS; its Arrow schema (types and nullability) gives the
-    docs table's."""
-    import time as _time
-
-    import numpy as np
-    import pyarrow as pa
-    import pyarrow.compute as pc
-    from pyspark.sql.pandas.types import from_arrow_schema
-
-    t_start = _time.perf_counter()
-    seg_id = store.new_segment_id()
-    rows = rows.select(DOC_COLS).sort_by([("conv_id", "ascending"), ("turn_idx", "ascending")])
+    Returns (docs, postings, term_df, dv, n_docs, field_sum_dl): the range's
+    docs and postings tables, its per-(field, term) doc counts, its distinct
+    (col, val, bk) dv rows, and its row count and per-field token sums.
+    Tokens come from `analysis.analyze`, norms from `scoring.int_to_byte4`.
+    A NULL field has NULL dl and norm and no postings, and counts nothing
+    towards the field's sum (the logical path's corpus_stats skips NULL
+    token arrays the same way)."""
+    rows = rows.select(DOC_COLS).sort_by([(k, "ascending") for k in KEYS], null_placement="at_start")
     n_docs = rows.num_rows
-    ordinal = np.arange(n_docs, dtype=np.int64)
+    ordinal = np.arange(first, first + n_docs, dtype=np.int64)
     docs = {"ordinal": pa.array(ordinal), **{c: rows[c] for c in DOC_COLS}}
-    docs_schema = [T.StructField("ordinal", T.LongType()), *from_arrow_schema(rows.schema)]
     terms: list[str] = []
     packed: list[np.ndarray] = []
     field_sum_dl, max_dl = {}, 0
@@ -576,11 +320,6 @@ def build_segment_local(store: SegmentStore, rows: "pa.Table", slice_id: str) ->
         norm = [None if n is None else scoring.int_to_byte4(n) for n in dl]
         docs[dl_col(f)] = pa.array(dl, pa.int32())
         docs[norm_col(f)] = pa.array(norm, pa.int32())
-        # size() of a NULL token array is NULL; the norm's CASE is always nullable
-        docs_schema += [
-            T.StructField(dl_col(f), T.IntegerType(), rows.schema.field(f).nullable),
-            T.StructField(norm_col(f), T.IntegerType()),
-        ]
         lens = np.array([n or 0 for n in dl], dtype=np.int64)
         field_sum_dl[f] = int(lens.sum())
         max_dl = max(max_dl, int(lens.max(initial=0)))
@@ -593,52 +332,199 @@ def build_segment_local(store: SegmentStore, rows: "pa.Table", slice_id: str) ->
             + (pos << PACK_NORM_BITS)
             + np.repeat(np.array([n or 0 for n in norm], dtype=np.int64), lens)
         )
-    _check_pack_budget(n_docs, max_dl)
-    # keyword subfields: the raw value at pos 0 with norm 0, as in build_segment
+    _check_pack_budget(first + n_docs, max_dl)
+    # keyword subfields: the raw value (KeywordFieldMapper indexes the exact
+    # bytes) at pos 0 with norm 0 (norms disabled on keyword fields)
     for j, f in enumerate(KEYWORD_FIELDS):
         present = pc.is_valid(rows[f]).to_numpy(zero_copy_only=False)
         terms += rows[f].filter(present).to_pylist()
         packed.append(((len(INDEXED_FIELDS) + j) << PACK_FID_SHIFT) + (ordinal[present] << PACK_ORD_SHIFT))
-    occ = pa.record_batch(
-        [pa.array(terms, pa.string()), pa.array(np.concatenate(packed), pa.int64())],
-        names=["term", "packed"],
-    )
-    postings = pa.Table.from_batches(list(_encode_partition(iter([occ]))), schema=_POSTINGS_ARROW)
+    postings = _encode_postings(pa.array(terms, pa.string()), np.concatenate(packed))
     dfs = postings.group_by(["field", "term"]).aggregate([("n", "sum")])
-    term_stats = pa.table({"field": dfs["field"], "term": dfs["term"], "df": dfs["n_sum"]}).sort_by(
-        [("field", "ascending"), ("term", "ascending")]
-    )
+    term_df = pa.table({"field": dfs["field"], "term": dfs["term"], "df": dfs["n_sum"].cast(pa.int64())})
     dv = []
     for c in NUMERIC_DV_COLS:
         present = pc.is_valid(rows[c]).to_numpy(zero_copy_only=False)
         vals = rows[c].filter(present).cast(pa.int64())
         bks = pa.array(ordinal[present] >> BLOCK_BITS, pa.int32())
         dv.append(pa.table({"col": pa.array([c] * len(vals), pa.string()), "val": vals, "bk": bks}))
-    dv = (
-        pa.concat_tables(dv)
-        .group_by(["col", "val", "bk"])
-        .aggregate([])
-        .sort_by([("col", "ascending"), ("val", "ascending"), ("bk", "ascending")])
-    )
+    dv = pa.concat_tables(dv).group_by(["col", "val", "bk"]).aggregate([])
+    return pa.table(docs), postings, term_df, dv, n_docs, field_sum_dl
 
-    write_local(store.docs_path(seg_id), pa.table(docs), T.StructType(docs_schema))
-    write_local(store.postings_path(seg_id), postings, POSTINGS_SCHEMA)
-    write_local(store.term_stats_path(seg_id), term_stats, TERM_STATS_SCHEMA)
-    write_local(store.dv_stats_path(seg_id), dv, DV_STATS_SCHEMA)
+
+def _docs_schema(doc_cols: T.StructType) -> T.StructType:
+    """Footer schema of a docs table whose DOC_COLS have the Spark schema
+    `doc_cols`: a field's dl and norm are NULL where the field is."""
+    fields = [T.StructField("ordinal", T.LongType()), *[doc_cols[c] for c in DOC_COLS]]
+    for f in INDEXED_FIELDS:
+        nullable = doc_cols[f].nullable
+        fields += [
+            T.StructField(dl_col(f), T.IntegerType(), nullable),
+            T.StructField(norm_col(f), T.IntegerType(), nullable),
+        ]
+    return T.StructType(fields)
+
+
+class _Part(NamedTuple):
+    """What a part hands the driver: its row count, per-field token sums (in
+    INDEXED_FIELDS order), (field, term, df) rows and dv rows."""
+
+    n_docs: int
+    field_sum_dl: list[int]
+    term_df: pa.Table
+    dv: pa.Table
+
+
+def _build_part(
+    store: SegmentStore, seg_id: str, docs_schema: T.StructType, rows: pa.Table, first: int, part: int
+) -> _Part:
+    """Encode one key range (`_encode_run`) and write its docs and postings
+    as part file `part` of the segment's tables; returns the small tables
+    and counts the driver sums over the parts."""
+    docs, postings, term_df, dv, n_docs, field_sum_dl = _encode_run(rows, first)
+    write_local(store.docs_path(seg_id), docs, docs_schema, part)
+    write_local(store.postings_path(seg_id), postings, POSTINGS_SCHEMA, part)
+    return _Part(n_docs, [field_sum_dl[f] for f in INDEXED_FIELDS], term_df, dv)
+
+
+def _finish_segment(
+    store: SegmentStore, seg_id: str, slice_id: str, parts: list[_Part], t_start: float,
+    partition_rows: list[int],
+) -> SegmentMeta:
+    """Driver side of a build: sum the parts' term counts into one sorted
+    term dictionary and merge their dv rows into one sorted dv block index
+    (parts hold disjoint blocks, so their dv rows are already distinct),
+    write both, and return the segment's meta."""
+    dfs = pa.concat_tables([p.term_df for p in parts]).group_by(["field", "term"]).aggregate([("df", "sum")])
+    term_stats = pa.table({"field": dfs["field"], "term": dfs["term"], "df": dfs["df_sum"]})
+    write_local(
+        store.term_stats_path(seg_id),
+        term_stats.sort_by([("field", "ascending"), ("term", "ascending")]),
+        TERM_STATS_SCHEMA,
+    )
+    dv = pa.concat_tables([p.dv for p in parts])
+    write_local(
+        store.dv_stats_path(seg_id),
+        dv.sort_by([("col", "ascending"), ("val", "ascending"), ("bk", "ascending")]),
+        DV_STATS_SCHEMA,
+    )
     return SegmentMeta(
         segment_id=seg_id,
-        n_docs=n_docs,
-        sum_dl=field_sum_dl["text"],
+        n_docs=sum(p.n_docs for p in parts),
         slice_id=slice_id,
         tier_bytes=store.dir_size(seg_id),
         metrics={
-            "partitions": 1,
+            "partitions": len(parts),
             "posting_fields": list(POSTING_FIELDS),
-            "partition_rows": [n_docs],
-            "build_sec": round(_time.perf_counter() - t_start, 3),
+            # per-partition lineage/metrics (north rule): rows each key range
+            # held, in partition-id order, + build wall time
+            "partition_rows": partition_rows,
+            "build_sec": round(time.perf_counter() - t_start, 3),
         },
-        field_sum_dl=field_sum_dl,
+        field_sum_dl={f: sum(p.field_sum_dl[i] for p in parts) for i, f in enumerate(INDEXED_FIELDS)},
     )
+
+
+def _ipc(table: pa.Table) -> bytes:
+    sink = pa.BufferOutputStream()
+    with pa.ipc.new_stream(sink, table.schema) as w:
+        w.write_table(table)
+    return sink.getvalue().to_pybytes()
+
+
+# one row per part, the _Part a task returns to the driver
+_PART_SCHEMA = T.StructType(
+    [
+        T.StructField("n_docs", T.LongType()),
+        T.StructField("field_sum_dl", T.ArrayType(T.LongType())),
+        T.StructField("term_df", T.BinaryType()),  # Arrow IPC stream
+        T.StructField("dv", T.BinaryType()),  # Arrow IPC stream
+    ]
+)
+
+
+def build_segment(
+    spark: SparkSession,
+    store: SegmentStore,
+    slice_df: DataFrame,
+    slice_id: str,
+    partitions: int | None = None,
+) -> SegmentMeta:
+    """Build one immutable segment from a transcripts slice.
+
+    The slice is range-partitioned by (conv_id, turn_idx) into P key ranges,
+    and each Spark task runs `_build_part` over its range, writing one docs
+    and one postings part file. P is `partitions` (default: the default
+    parallelism), lowered to ceil(n / BLOCK_RANGE) and raised to
+    ceil(n / MAX_LOCAL_ROWS). Part i's first ordinal is
+    the block-rounded row count of the ranges before it. Spark jobs: the row
+    count, the range sample and per-range counts over the cached ranges, and
+    the encode."""
+    from pyspark import StorageLevel, TaskContext
+
+    t_start = time.perf_counter()
+    seg_id = store.new_segment_id()
+    slice_df = slice_df.select(*DOC_COLS)
+    n = slice_df.count()
+    p = max(
+        min(partitions or spark.sparkContext.defaultParallelism, -(-n // BLOCK_RANGE)),
+        -(-n // MAX_LOCAL_ROWS),
+        1,
+    )
+    ranges = slice_df.repartitionByRange(p, *KEYS).persist(StorageLevel.MEMORY_AND_DISK)
+    counts = {
+        r.pid: r.n
+        for r in ranges.groupBy(F.spark_partition_id().alias("pid"))
+        .agg(F.count(F.lit(1)).alias("n"))
+        .collect()
+    }
+    firsts, acc = {}, 0
+    for pid in sorted(counts):
+        firsts[pid] = acc
+        acc += -(-counts[pid] // BLOCK_RANGE) * BLOCK_RANGE
+    docs_schema = _docs_schema(slice_df.schema)
+    empty = to_arrow_schema(slice_df.schema).empty_table()
+    part_arrow = to_arrow_schema(_PART_SCHEMA)
+
+    def encode(batches):
+        pid = TaskContext.get().partitionId()
+        batches = list(batches)
+        rows = pa.Table.from_batches(batches) if batches else empty
+        part = _build_part(store, seg_id, docs_schema, rows, firsts.get(pid, 0), pid)
+        yield pa.record_batch(
+            [[part.n_docs], [part.field_sum_dl], [_ipc(part.term_df)], [_ipc(part.dv)]],
+            schema=part_arrow,
+        )
+
+    try:
+        collected = ranges.mapInArrow(encode, _PART_SCHEMA).collect()
+    finally:
+        ranges.unpersist()
+    parts = [
+        _Part(
+            r.n_docs,
+            list(r.field_sum_dl),
+            pa.ipc.open_stream(pa.py_buffer(r.term_df)).read_all(),
+            pa.ipc.open_stream(pa.py_buffer(r.dv)).read_all(),
+        )
+        for r in collected
+    ]
+    return _finish_segment(
+        store, seg_id, slice_id, parts, t_start, [counts[k] for k in sorted(counts)]
+    )
+
+
+def build_segment_local(store: SegmentStore, rows: pa.Table, slice_id: str) -> SegmentMeta:
+    """`build_segment` on the driver, for a batch small enough to hold there
+    (at most MAX_LOCAL_ROWS rows, such as an update batch): `_build_part`
+    runs once, over the whole batch, with no Spark job. `rows` holds
+    DOC_COLS; its Arrow schema (types and nullability) gives the docs
+    table's."""
+    t_start = time.perf_counter()
+    seg_id = store.new_segment_id()
+    docs_schema = _docs_schema(from_arrow_schema(rows.select(DOC_COLS).schema))
+    part = _build_part(store, seg_id, docs_schema, rows, 0, 0)
+    return _finish_segment(store, seg_id, slice_id, [part], t_start, [part.n_docs])
 
 
 def build_index(

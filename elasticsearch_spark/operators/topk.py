@@ -315,15 +315,10 @@ def read_segment_postings(
     parts = []
     for seg in snap.segments:
         d = read_spark(spark, store.postings_path(seg.segment_id))
-        if "field" not in d.columns:  # pre-multi-field segment: text only
-            d = d.withColumn("field", F.lit("text"))
         parts.append(d.where(pred).withColumn("segment", F.lit(seg.segment_id)))
     df = parts[0]
     for p in parts[1:]:
-        # allowMissingColumns: a legacy segment without position streams
-        # null-fills them (term scoring stays exact; a phrase/intervals query
-        # touching such a segment raises a clear error in the kernel)
-        df = df.unionByName(p, allowMissingColumns=True)
+        df = df.unionByName(p)
     return df
 
 
@@ -397,11 +392,7 @@ def expand_terms(
     With neither given, MAX_CLAUSE_COUNT applies as the backstop."""
     parts = []
     for seg in snap.segments:
-        d = read_spark(spark, store.term_stats_path(seg.segment_id))
-        if "field" in d.columns:
-            d = d.where(F.col("field") == field_name)
-        elif field_name != "text":
-            continue
+        d = read_spark(spark, store.term_stats_path(seg.segment_id)).where(F.col("field") == field_name)
         if kind == "prefix":
             d = d.where(F.col("term").startswith(value))
         elif kind == "wildcard":
@@ -540,10 +531,11 @@ class _Lowerer:
         norms-less keyword field (query_dsl._keyword_idf_scored twin).
 
         df per value comes from the keyword subfield's term dictionary when
-        the store has one — an O(values) point lookup, the same TermStates
+        the field has one — an O(values) point lookup, the same TermStates
         seek every postings leaf does — and falls back to a docs-column
-        count only for true legacy segments or stores with deletes (the
-        dictionary df still counts deleted docs; the oracle view doesn't)."""
+        count for other fields, non-string values, and stores with deletes
+        (the dictionary df still counts deleted docs; the oracle view
+        doesn't)."""
         n = self.snap.n_docs
         dfs: dict | None = None
         if (
@@ -690,8 +682,6 @@ class _Lowerer:
         dict_parts = []
         for seg in self.snap.segments:
             d = read_spark(self.spark, self.store.term_stats_path(seg.segment_id))
-            if "field" not in d.columns:  # pre-multi-field segment: text only
-                d = d.withColumn("field", F.lit("text"))
             dict_parts.append(d.where(F.col("field") == field_).select("term", "df"))
         stats = dict_parts[0]
         for p in dict_parts[1:]:
@@ -1895,15 +1885,6 @@ def _make_kernel(spec_tree, weights, avgdl, k, phrase_fts):
                 tfn = kp1 * tfs / (tfs + k1 * (1.0 - b + b * dlq / ad))
                 occ_keys = None
                 if ft in phrase_fts:
-                    if r["poss"] is None:
-                        # legacy segment without position streams (unionByName
-                        # null-filled): a positional query cannot degrade to a
-                        # correct answer — fail loudly, not with a TypeError
-                        raise ValueError(
-                            f"segment {bkv!r} has no position stream for "
-                            f"field/term {ft!r}; rebuild the segment to run "
-                            "phrase/intervals queries"
-                        )
                     # absolute positions from the concatenated delta stream
                     d = varbyte_decode(r["poss"]).astype(np.int64)
                     cs = np.cumsum(d)
@@ -2064,17 +2045,12 @@ def _dv_block_pred(spark, store, snap, nq: dict):
     """Candidate-block predicate for a docs-only plan from the numeric
     doc-value block index (ES's BKD points path for ranges,
     index/mapper/NumberFieldMapper.java). Returns None when the query has no
-    conjunctive dv constraint, a segment predates the dv table, or the range
-    covers too many blocks for a useful predicate (a full scan is the honest
-    plan then)."""
-    import os
-
+    conjunctive dv constraint, or the range covers too many blocks for a
+    useful predicate (a full scan is the honest plan then)."""
     constraints = _dv_conjunctive_constraints(nq)
     if not constraints:
         return None
     paths = [store.dv_stats_path(s.segment_id) for s in snap.segments]
-    if not all(os.path.exists(p) for p in paths):
-        return None
     cap = MAX_CHANNEL_PRUNE_RANGES * 64
     blocks: set[tuple[str, int]] | None = None
     for col, lo, hi in constraints:

@@ -29,8 +29,9 @@ point reads of the key-sorted docs tables, the delete file and the new
 segment are written with pyarrow (`write_local`, `build_segment_local`), and
 the images are driver-local frames, so the whole update runs at most the one
 job that collects the batch. A larger batch, too big to hold on the driver,
-runs as Spark joins and the Spark segment build; it first pays for the
-collect that found it too big.
+runs as Spark joins and `build_segment`; it first pays for the collect that
+found it too big. LOCAL_UPDATE_MAX_ROWS is the build's MAX_LOCAL_ROWS, the
+most rows one Python process encodes at once.
 """
 
 from __future__ import annotations
@@ -53,16 +54,12 @@ from ..sources.segment_store import (
     write_local,
 )
 from .index_build import DOC_COLS, build_segment, build_segment_local
+from .index_build import MAX_LOCAL_ROWS as LOCAL_UPDATE_MAX_ROWS
 from .topk import read_segment_docs
 
 KEYS = ["conv_id", "turn_idx"]
 UPDATABLE = [c for c in DOC_COLS if c not in KEYS]
 MAX_DOCS_RETURN = 10  # UpdateByQueryRequest.java:52
-# The largest batch applied on the driver; a larger one runs on Spark. On a
-# 4-core host the driver path was faster at every size measured, up to 200k
-# rows (50k: ~4-5.7 s against ~11-13 s), so the cap bounds driver memory, not
-# time: the driver path's peak grows ~11 KB a row (~0.5 GB at 50k rows).
-LOCAL_UPDATE_MAX_ROWS = 50_000
 # footer schema of a Spark-written delete file (segment is a literal)
 DELETES_SCHEMA = T.StructType(
     [

@@ -18,15 +18,17 @@ InternalEngine.java:889-968) AND of Iceberg snapshots for time-travel:
                                     deletes (Lucene liveDocs analog)
 
 Every table is a parquet directory in Spark's layout (`part-*.parquet`
-data files plus a `_SUCCESS` marker, the Spark schema in each footer). Two
-writers produce it: Spark's DataFrame writer for builds and merges, and
-`write_local` for the tables of a small update batch, which are built on the
-driver with pyarrow. Reads come in two kinds (see the bottom of this module):
-the tables a query scans in bulk (docs, postings, delete files) are Spark
-DataFrames whose schema comes from the parquet footer, and the small sorted
-tables a query only seeks into (term dictionary, dv block index, a few docs
-rows by ordinal or key) are read on the driver with pyarrow, pruned by
-row-group min/max statistics.
+data files plus a `_SUCCESS` marker, the Spark schema in each footer). One
+pyarrow writer, `write_local`, produces the segment tables: each Spark task
+of a build writes its own part file of the docs and postings, and the driver
+writes the term dictionary, the dv block index, and the tables and delete
+file of a small update batch. Spark's DataFrame writer writes only the
+delete files of Spark-side updates and deletes. Reads come in two kinds (see
+the bottom of this module): the tables a query scans in bulk (docs,
+postings, delete files) are Spark DataFrames whose schema comes from the
+parquet footer, and the small sorted tables a query only seeks into (term
+dictionary, dv block index, a few docs rows by ordinal or key) are read on
+the driver with pyarrow, pruned by row-group min/max statistics.
 
 Commit protocol (mirrors Iceberg): write all data files, write the new
 snapshot json, then atomically swap CURRENT via os.rename. A killed build
@@ -57,7 +59,6 @@ from pyspark.sql.types import StructField, StructType
 class SegmentMeta:
     segment_id: str
     n_docs: int
-    sum_dl: int
     slice_id: str  # lineage: which input slice produced this segment
     tier_bytes: int = 0  # on-disk size, drives LSM tier selection
     metrics: dict[str, Any] = field(default_factory=dict)
@@ -66,8 +67,7 @@ class SegmentMeta:
     # for streaming/resume) still recognizes them after compaction rewrites
     # slice_id to "merge(...)".
     source_slices: list[str] = field(default_factory=list)
-    # per-indexed-field token-count sums (BM25 avgdl numerators); sum_dl stays
-    # the `text` field's for manifest back-compat.
+    # per-indexed-field token-count sums (BM25 avgdl numerators)
     field_sum_dl: dict[str, int] = field(default_factory=dict)
 
     @property
@@ -99,17 +99,9 @@ class Snapshot:
     def n_docs(self) -> int:
         return sum(s.n_docs for s in self.segments)
 
-    @property
-    def sum_dl(self) -> int:
-        return sum(s.sum_dl for s in self.segments)
-
     def field_sum_dl(self, field_name: str) -> int:
-        """Per-field sum of token counts (falls back to sum_dl for `text` on
-        manifests written before multi-field indexing)."""
-        return sum(
-            s.field_sum_dl.get(field_name, s.sum_dl if field_name == "text" else 0)
-            for s in self.segments
-        )
+        """Per-field sum of token counts."""
+        return sum(s.field_sum_dl[field_name] for s in self.segments)
 
 
 class SegmentStore:
@@ -239,7 +231,7 @@ class SegmentStore:
                         keep_segs.add(s.segment_id)  # don't re-remove
             for df in snap.delete_files:
                 if df not in keep_dels and os.path.exists(df):
-                    os.remove(df)
+                    shutil.rmtree(df)
                     removed.append(df)
                     keep_dels.add(df)
             os.remove(os.path.join(self.root, "snapshots", f"v{sid}.json"))
@@ -325,17 +317,36 @@ def read_point(path: str, columns: list[str], filters: list) -> pa.Table:
     return pq.read_table(_data_files(path), columns=columns, filters=filters)
 
 
-def write_local(path: str, table: pa.Table, spark_schema: StructType) -> None:
-    """Driver-side write of one small table in the layout Spark's writer
-    leaves: one `part-00000.parquet` data file and a `_SUCCESS` marker, with
-    `spark_schema` stored under `SPARK_SCHEMA_KEY`. `footer_schema`,
-    `read_spark`, `read_point` and merges read it like a Spark-written table.
-    Columns are cast to the Arrow form of `spark_schema` (timestamps as UTC
-    microseconds), so Spark reads back exactly the declared types."""
+# pyarrow writer settings by column name. Near-unique terms and the
+# postings' encoded blobs gain nothing from a dictionary page; min/max
+# statistics pay only on the columns a reader prunes by, so the postings
+# keep them on field, term and bk alone.
+NO_DICTIONARY = frozenset({"term", "docs", "tfs", "norms", "poss"})
+NO_STATISTICS = frozenset({"n", "max_tf", "min_dlq", "docs", "tfs", "norms", "poss"})
+
+
+def write_local(path: str, table: pa.Table, spark_schema: StructType, part: int = 0) -> None:
+    """Write `table` as data file `part-{part:05d}.parquet` of the table
+    directory `path`, in the layout Spark's writer leaves: a `_SUCCESS`
+    marker, and `spark_schema` stored under `SPARK_SCHEMA_KEY`.
+    `footer_schema`, `read_spark`, `read_point` and merges read it like a
+    Spark-written table. Columns are cast to the Arrow form of
+    `spark_schema` (timestamps as UTC microseconds), so Spark reads back
+    exactly the declared types. The file is written under a hidden temporary
+    name and renamed into place, so readers never see half a file and a
+    retried Spark task rewrites the same bytes."""
     from pyspark.sql.pandas.types import to_arrow_schema
 
     table = table.select(spark_schema.names).cast(to_arrow_schema(spark_schema))
     table = table.replace_schema_metadata({SPARK_SCHEMA_KEY: spark_schema.json().encode()})
     os.makedirs(path, exist_ok=True)
-    pq.write_table(table, os.path.join(path, "part-00000.parquet"))
+    name = f"part-{part:05d}.parquet"
+    tmp = os.path.join(path, f".{name}.{uuid.uuid4().hex}")
+    pq.write_table(
+        table,
+        tmp,
+        use_dictionary=[c for c in table.column_names if c not in NO_DICTIONARY],
+        write_statistics=[c for c in table.column_names if c not in NO_STATISTICS],
+    )
+    os.replace(tmp, os.path.join(path, name))
     open(os.path.join(path, "_SUCCESS"), "w").close()

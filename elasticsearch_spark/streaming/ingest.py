@@ -6,7 +6,7 @@ when an in-memory buffer is flushed into a new immutable segment; durability
 rides the translog checkpoint (translog/Checkpoint.java:43-106).
 
 Spark mapping: `readStream` over an arriving-files source; every micro-batch
-is flushed through the SAME one-shuffle segment build as batch indexing and
+is flushed through the SAME segment build as batch indexing and
 committed as a snapshot — "refresh" == micro-batch boundary. Exactly-once
 across restarts comes from two layers, mirroring translog + Lucene commit:
   * Structured Streaming's checkpoint replays an interrupted batch;

@@ -12,7 +12,9 @@ Invariants (SURVEY.md §5.3-5.4):
 from __future__ import annotations
 
 import datetime as dt
+import glob
 import json
+import os
 import time
 
 import pandas as pd
@@ -20,6 +22,8 @@ import pyarrow.parquet as pq
 import pytest
 from conftest import spark_jobs
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
+from test_indexed_path import INDEXED_QUERIES
 
 from elasticsearch_spark.functions import analysis
 from elasticsearch_spark.operators import index_build, merge, topk, update
@@ -108,9 +112,9 @@ class TestMerge:
         from elasticsearch_spark.sources.segment_store import SegmentMeta
 
         small = [
-            SegmentMeta(f"s{i}", 10, 100, f"sl{i}", tier_bytes=1000) for i in range(3)
+            SegmentMeta(f"s{i}", 10, f"sl{i}", tier_bytes=1000) for i in range(3)
         ]
-        big = [SegmentMeta("b0", 10, 100, "bl", tier_bytes=10 * 1024**3)]
+        big = [SegmentMeta("b0", 10, "bl", tier_bytes=10 * 1024**3)]
         batches = merge.pick_merges(small + big)
         assert batches == [["s0", "s1", "s2"]]
 
@@ -218,25 +222,24 @@ class TestUpdate:
 
 
 def test_expire_snapshots_vacuum(spark, transcripts, store4):
-    import os
-
-    from elasticsearch_spark.operators import merge
-
+    key = update.read_snapshot_table(spark, store4).select(*KEYS).limit(1)
+    update.apply_updates(spark, store4, key.withColumn("tool", F.lit("vacuumed")))
+    (del_file,) = store4.snapshot().delete_files
+    assert os.path.isdir(del_file)
     pre_segs = [s.segment_id for s in store4.snapshot().segments]
     merge.compact(spark, store4, partitions=4)
     # all snapshots still readable pre-expiry
     assert len(store4.history()) >= 2
+    assert store4.snapshot().delete_files == []
     removed = store4.expire_snapshots(keep_last=1)
     assert len(store4.history()) == 1
-    # merged-away input segments physically vacuumed
+    # merged-away input segments and the dropped delete file physically vacuumed
     live = {s.segment_id for s in store4.snapshot().segments}
     for sid in pre_segs:
         if sid not in live:
             assert not os.path.isdir(store4.segment_dir(sid))
-    assert removed
+    assert del_file in removed and not os.path.exists(del_file)
     # current snapshot still answers queries
-    from elasticsearch_spark.operators import topk
-
     assert topk.search_indexed(spark, store4, Q_OR, k=5).count() == 5
 
 
@@ -249,11 +252,20 @@ def _footer(path):
     return json.loads(meta[segment_store.SPARK_SCHEMA_KEY])
 
 
-def _table_rows(spark, path):
-    return sorted(map(tuple, segment_store.read_spark(spark, path).collect()), key=repr)
+# queries that match the generated corpus (its vocabulary is w<rank>)
+GENERATED_QUERIES = [
+    {"match": {"text": "w1"}},
+    {"match": {"text": "w7 w60 w400"}},
+    {"match": {"text": {"query": "w1 w2 w3", "operator": "and"}}},
+    {"match_phrase": {"text": "w1 w1"}},
+    {"bool": {"must": [{"match": {"text": "w5 w9"}}], "filter": [{"term": {"role": "user"}}]}},
+    {"bool": {"must": [{"match": {"text": "w3"}}], "must_not": [{"term": {"tool": "code"}}]}},
+    {"bool": {"filter": [{"range": {"turn_idx": {"gte": 2, "lt": 5}}}]}},
+]
 
 
-def test_build_segment_local_matches_spark_build(spark, transcripts, tmp_path):
+def _odd_slice(spark, transcripts):
+    """300 fixture rows plus Unicode text, NULL and empty fields and µs `ts`."""
     odd = spark.createDataFrame(
         [
             ("conv_x", 0, "user", "İstanbul ΑΣ ½ x² café", "", dt.datetime(2024, 1, 1, 0, 0, 0, 123456)),
@@ -263,31 +275,75 @@ def test_build_segment_local_matches_spark_build(spark, transcripts, tmp_path):
         ],
         UPDATE_DDL,
     )
-    slice_df = transcripts.orderBy(*KEYS).limit(300).unionByName(odd)
-    assert _assert_local_build_matches(spark, slice_df, tmp_path) == 304
+    return transcripts.orderBy(*KEYS).limit(300).unionByName(odd)
 
 
-def test_build_segment_local_matches_spark_build_over_two_blocks(spark, tmp_path):
-    n = index_build.BLOCK_RANGE + 300
-    slice_df = TR.generate_transcripts(spark, n, seed=5, partitions=2)
-    assert _assert_local_build_matches(spark, slice_df, tmp_path) == n
+@pytest.mark.parametrize(
+    "corpus",
+    ["fixture_304", "generated_two_blocks"],
+)
+def test_part_count_keeps_answers(spark, transcripts, tmp_path, corpus):
+    """A build answers every query the same with 1, 2 or 4 requested
+    partitions and on the driver: same rows and scores, n_docs, field sums
+    and footer schemas. Each part starts on a block boundary and no postings
+    block appears twice."""
+    if corpus == "fixture_304":
+        slice_df, queries = _odd_slice(spark, transcripts), INDEXED_QUERIES
+    else:
+        n = index_build.BLOCK_RANGE + 300
+        slice_df, queries = TR.generate_transcripts(spark, n, seed=5, partitions=2), GENERATED_QUERIES
+    slice_df = slice_df.cache()
+    n = slice_df.count()
+    stores = {}
+    for parts in (1, 2, 4, "local"):
+        store = segment_store.SegmentStore(str(tmp_path / str(parts)))
+        if parts == "local":
+            meta = index_build.build_segment_local(store, slice_df.toArrow(), "s")
+        else:
+            meta = index_build.build_segment(spark, store, slice_df, "s", partitions=parts)
+            assert meta.metrics["partitions"] == min(parts, -(-n // index_build.BLOCK_RANGE))
+        store.commit([meta], "append")
+        stores[parts] = (store, meta)
+    slice_df.unpersist()
+
+    def answers(store):
+        return [_rows(topk.search_indexed(spark, store, qd, k=10)) for qd in queries]
+
+    want_store, want_meta = stores["local"]
+    want = answers(want_store)
+    assert all(want), "every query matches"
+    assert want_meta.n_docs == n
+    for parts, (store, meta) in stores.items():
+        assert (meta.n_docs, meta.field_sum_dl) == (want_meta.n_docs, want_meta.field_sum_dl), parts
+        for table in ("docs_path", "postings_path", "term_stats_path", "dv_stats_path"):
+            assert _footer(getattr(store, table)(meta.segment_id)) == _footer(
+                getattr(want_store, table)(want_meta.segment_id)
+            ), (parts, table)
+        files = segment_store._data_files(store.docs_path(meta.segment_id))
+        last_key = None
+        for f in files:
+            t = pq.read_table(f, columns=["ordinal", *KEYS])
+            assert t["ordinal"][0].as_py() % index_build.BLOCK_RANGE == 0, (parts, f)
+            keys = list(zip(t["conv_id"].to_pylist(), t["turn_idx"].to_pylist()))
+            assert keys == sorted(keys) and (last_key is None or last_key < keys[0])
+            last_key = keys[-1]
+        blocks = segment_store.read_point(store.postings_path(meta.segment_id), ["field", "term", "bk"], None)
+        assert blocks.group_by(["field", "term", "bk"]).aggregate([]).num_rows == blocks.num_rows
+        if parts != "local":
+            assert answers(store) == want, parts
 
 
-def _assert_local_build_matches(spark, slice_df, tmp_path):
-    """Build `slice_df` both ways and compare the four tables; returns n_docs."""
+def test_build_runs_fewer_spark_jobs(spark, transcripts, tmp_path):
     store = segment_store.SegmentStore(str(tmp_path))
-    spark_meta = index_build.build_segment(spark, store, slice_df, "s", partitions=2)
-    local_meta = index_build.build_segment_local(store, slice_df.toArrow(), "s")
-    assert (local_meta.n_docs, local_meta.field_sum_dl) == (spark_meta.n_docs, spark_meta.field_sum_dl)
-    for table in ("docs_path", "postings_path", "term_stats_path", "dv_stats_path"):
-        want = getattr(store, table)(spark_meta.segment_id)
-        got = getattr(store, table)(local_meta.segment_id)
-        assert _footer(got) == _footer(want), table
-        assert _table_rows(spark, got) == _table_rows(spark, want), table
-    return local_meta.n_docs
+    meta, jobs = spark_jobs(spark, lambda: index_build.build_segment(spark, store, transcripts, "s"))
+    assert meta.n_docs == transcripts.count()
+    assert jobs < 13
 
 
-def test_analyze_matches_spark_tokens(spark):
+def test_analyze_matches_spark_tokens(spark, sf_dir):
+    """The index tokenizer (`analyze`) equals the logical plan's JVM
+    `tokens` on hand-picked Unicode, on every string in the fixture tables
+    and on a generated corpus."""
     texts = [
         "İstanbul ΑΣ ½ x² café",
         "Hello, World! don't STOP-me 42x",
@@ -297,8 +353,38 @@ def test_analyze_matches_spark_tokens(spark):
         "a" * 300,
     ]
     df = spark.createDataFrame(pd.DataFrame({"t": texts}))
-    got = [list(r[0]) for r in df.select(analysis.tokens("t")).collect()]
-    assert got == [analysis.analyze(t) for t in texts]
+    for path in sorted(glob.glob(os.path.join(sf_dir, "*.parquet"))):
+        table = spark.read.parquet(path)
+        for f in table.schema:
+            if isinstance(f.dataType, T.StringType):
+                df = df.unionByName(table.select(F.col(f.name).alias("t")))
+    gen = TR.generate_transcripts(spark, 3000, seed=11, partitions=2)
+    for c in ("text", "tool", "role"):
+        df = df.unionByName(gen.select(F.col(c).alias("t")))
+    rows = df.where(F.col("t").isNotNull()).select("t", analysis.tokens("t").alias("tok")).collect()
+    assert len(rows) > 10_000
+    bad = [(r.t, list(r.tok)) for r in rows if list(r.tok) != analysis.analyze(r.t)]
+    assert not bad, bad[:3]
+
+
+def test_analyze_splits_on_every_non_alnum_code_point():
+    """`analyze` keeps exactly the str.isalnum() characters, over all of
+    Unicode: the reference loop below is the tokenizer's definition."""
+
+    def isalnum_runs(text):
+        out, cur = [], []
+        for ch in text.lower():
+            if ch.isalnum():
+                cur.append(ch)
+            elif cur:
+                out.append("".join(cur))
+                cur = []
+        return out + ["".join(cur)] if cur else out
+
+    for cp in range(0x110000):
+        if not 0xD800 <= cp < 0xE000:
+            text = f"a{chr(cp)}b {chr(cp)}"
+            assert analysis.analyze(text) == isalnum_runs(text), hex(cp)
 
 
 def test_small_update_runs_on_driver(spark, transcripts, store4):

@@ -420,29 +420,6 @@ class TestDvBlockPruning:
         assert any(issubclass(x.category, topk.IndexedFallbackWarning) for x in w)
         assert len(res) == 5  # still answered, via the logical plan
 
-    def test_legacy_segment_without_dv_falls_back(self, spark, transcripts, tmp_path):
-        import shutil
-
-        from elasticsearch_spark.operators import index_build, topk
-
-        store = index_build.build_index(
-            spark, transcripts, str(tmp_path / "legacy"), n_slices=1, partitions=4
-        )
-        snap = store.snapshot()
-        for seg in snap.segments:
-            shutil.rmtree(store.dv_stats_path(seg.segment_id))
-        qd = {"range": {"turn_idx": {"gte": 7, "lte": 9}}}
-        assert topk._dv_block_pred(spark, store, snap, Q.normalize_query(qd)) is None
-        idx = [
-            (r.conv_id, r.turn_idx, r.score)
-            for r in topk.search_indexed(spark, store, qd, k=10).collect()
-        ]
-        log = [
-            (r.conv_id, r.turn_idx, round(r.score, 4))
-            for r in Q.search(transcripts, qd, KEYS, k=10).collect()
-        ]
-        assert idx == log
-
 
 class TestMultiFragmentHighlighter:
     """HighlightBuilder breadth: pre/post tags, number_of_fragments,

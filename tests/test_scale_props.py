@@ -16,9 +16,10 @@ KEYS = ["conv_id", "turn_idx"]
 
 
 def test_hot_term_spreads_across_block_keys(spark, tmp_path_factory):
-    """The north rule's salted-key skew handling: a term present in most docs
-    must spread over multiple (term, bk) shuffle keys, each block bounded by
-    BLOCK_RANGE postings — no single reducer ever owns a whole hot term."""
+    """The north rule's skew handling: a term present in most docs spreads
+    over multiple (term, bk) postings rows, each block bounded by
+    BLOCK_RANGE postings — the build's key ranges each encode their own
+    blocks, so no single task owns a whole hot term."""
     root = str(tmp_path_factory.mktemp("skew_idx"))
     df = generate_transcripts(spark, 10000, partitions=8)
     store = index_build.build_index(spark, df, root, n_slices=1, partitions=8)
