@@ -4,8 +4,11 @@
 Default mode — one JSON line on stdout:
   * index build over a deterministic synthetic transcript corpus sized to the
     scale factor (2M turns/sf => sf0.1 = 200k turns): indexed turns/sec,
-  * the headline BM25 match/bool query suite over the built segment store
-    (block-max kernel path): per-query latency + p50.
+  * a BM25 query suite over the built segment store: perfbench's query mix
+    (`perfbench.inputs.query_mix`), whose terms are picked by measured df
+    from the corpus's own `w<rank>` vocabulary, so every query matches.
+    Per-query latency + p50; a query that returns fewer than k rows fails
+    the run.
 
 `--scaling` mode — the north rule's two-cluster-size criterion evidenced on
 one machine: the same build job at two parallelism levels (local[N] vs
@@ -31,20 +34,11 @@ sys.path.insert(0, str(Path(__file__).resolve().parent))
 from pyspark.sql import SparkSession  # noqa: E402
 
 from elasticsearch_spark.operators import index_build, topk  # noqa: E402
-from elasticsearch_spark.queryset import DEFAULT_K, SEARCH_QUERIES  # noqa: E402
+from elasticsearch_spark.queryset import DEFAULT_K  # noqa: E402
 from elasticsearch_spark.sources.transcripts import generate_transcripts  # noqa: E402
+from perfbench import inputs  # noqa: E402
 
-BENCH_QUERY_NAMES = [
-    "match_or_topk",
-    "match_and_topk",
-    "match_msm_topk",
-    "match_single_term",
-    "bool_must_filter",
-    "bool_must_not",
-    # phrase vs its match twin: evidences that phrase clauses keep block-max
-    # pruning (a phrase should stay within ~2x of the equivalent match)
-    "match_phrase_topk",
-]
+QUERY_SEED = 7  # seed of the query mix drawn from the corpus vocabulary
 
 TURNS_PER_SF = 2_000_000  # sf0.1 -> 200k synthetic turns
 
@@ -97,7 +91,7 @@ def _warmup(spark: SparkSession):
     try:
         df = generate_transcripts(spark, 2000, partitions=8)
         store = index_build.build_index(spark, df, root, n_slices=1, partitions=8)
-        topk.search_indexed(spark, store, SEARCH_QUERIES["match_or_topk"], k=5).collect()
+        topk.search_indexed(spark, store, {"match": {"text": "w1 w2"}}, k=5).collect()
     finally:
         shutil.rmtree(root, ignore_errors=True)
 
@@ -181,15 +175,19 @@ def run_default() -> dict:
             "build_from_in_band_trials": len(in_band),
         }
         q_times: dict[str, float] = {}
-        for name in BENCH_QUERY_NAMES:
-            qd = SEARCH_QUERIES[name]
+        mix = inputs.query_mix(inputs.term_dfs(_corpus(spark, n_turns, cpus)), QUERY_SEED)
+        for q in mix:
             # best-of-trials steady state (first run pays postings-file open)
             best = float("inf")
             for _ in range(QUERY_TRIALS):
                 t0 = time.perf_counter()
-                topk.search_indexed(spark, store, qd, k=DEFAULT_K).collect()
+                rows = topk.search_indexed(spark, store, q["query"], k=DEFAULT_K).collect()
                 best = min(best, time.perf_counter() - t0)
-            q_times[name] = round(best, 4)
+                if len(rows) < DEFAULT_K:
+                    raise RuntimeError(
+                        f"bench query {q['name']} returned {len(rows)} < {DEFAULT_K} rows"
+                    )
+            q_times[q["name"]] = round(best, 4)
         calibration["query_window_calib_sec"] = round(_calibrate(), 3)
         lat = sorted(q_times.values())
         p50 = lat[len(lat) // 2]

@@ -159,8 +159,9 @@ def terminate_after_scan(
     keys. Spark packs multiple files into a scan partition in SIZE order (not
     key order), which breaks that prefix property — so the scan is built as a
     union of per-FILE reads: each docs file is key-sorted with a disjoint key
-    range (the build range-partitions by key and each task writes one sorted
-    part file), each union leg's partitions contain only that file's splits,
+    range (a small segment is one sorted file written on the driver; a larger
+    build range-partitions by key and each task writes one sorted part
+    file), each union leg's partitions contain only that file's splits,
     and the delete anti-join is broadcast so no shuffle disturbs the
     ordering. Per-file prefix + coordinator orderBy().limit(n) == the global
     first n matching docs by (conv_id, turn_idx), deterministically. (At a

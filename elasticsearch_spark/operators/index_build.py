@@ -2,24 +2,30 @@
 
 Shape (SURVEY.md §3.2): a segment is built where its documents are, like
 Lucene's per-thread segment writer and ES's per-shard indexing, and no token
-occurrence crosses a shuffle. `build_segment` range-partitions the slice by
-(conv_id, turn_idx) and each Spark task runs the pyarrow/numpy encoder
-(`_build_part`) over its own key range: analyze -> (term, packed) occurrence arrays -> columnar sort
--> delta+varbyte blocks -> one docs and one postings part file. The driver
-sums the parts' term counts and dv rows into one sorted term dictionary and
-one dv block index. `build_segment_local` runs the same encoder once, on the
-driver, for a batch small enough to hold there.
+occurrence crosses a shuffle. One encoder, `_build_part`, turns a key range
+of rows into one docs and one postings part file: analyze -> (term, packed)
+occurrence arrays -> columnar sort -> delta+varbyte blocks. The driver sums
+the parts' term counts and dv rows into one sorted term dictionary and one dv
+block index. `build_segment` runs the encoder in one of two places:
+  * on the driver, once over the whole slice, when the slice has at most
+    LOCAL_BUILD_MAX_ROWS rows, like ES writing a small segment at refresh
+    inside the indexing process: one limited collect is the only Spark job;
+  * in Spark tasks, one per key range of a range-partitioned larger slice.
+`build_segment_local` is the driver path for rows already on the driver.
 
 Scale design decisions:
   * Doc ordinals follow key order within a segment. Each part's first
     ordinal is a multiple of BLOCK_RANGE, computed from the per-partition
     row counts, so no postings block spans two parts; ordinals therefore
-    have gaps between parts, and n_docs is the sum of the parts' rows.
+    have gaps between parts, and n_docs is the sum of the parts' rows. A
+    driver-built segment has one part, so its ordinals are dense.
     Offsets derive from deterministic key ranges, never from
     monotonically_increasing_id (SURVEY §7).
   * Postings blocks are FIXED ORDINAL RANGES (BLOCK_RANGE ordinals), not
     fixed posting counts: a hot term ("the", df=every doc) is one postings
     row per block, and block-max metadata stays exact after any merge.
+  * The driver path is chosen by time, not memory: below the cap the Spark
+    path's fixed per-job cost exceeds the single-threaded encode it saves.
   * A task holds its key range in memory (the Lucene RAM-buffer-then-flush
     analog), so parts average at most MAX_LOCAL_ROWS rows; and each part
     starts a new block, so a slice gets no more parts than the blocks its
@@ -27,6 +33,9 @@ Scale design decisions:
   * A segment is the unit of resumability: one committed snapshot per input
     slice (ES translog-checkpoint analog, Checkpoint.java:43-106); a killed
     build resumes by skipping slice_ids already in the manifest.
+  * `SegmentMeta.metrics` records the path ("build_path") and each stage's
+    seconds ("stage_sec": the collect, the Spark path's partitioning, the
+    encode and part writes, the dictionary and dv writes).
 
 Per-block metadata for block-max WAND (TopDocsCollectorContext.java:212-296
 enables the threshold; skipping machinery is Lucene impacts): max_tf and
@@ -59,6 +68,16 @@ BLOCK_RANGE = 1 << BLOCK_BITS  # ordinals per postings block
 # 4-core host the driver-side update path's peak grew ~11 KB a row (~0.5 GB
 # at 50k rows) and was faster than the Spark path at every size up to 200k.
 MAX_LOCAL_ROWS = 50_000
+
+# The most rows `build_segment` builds on the driver instead of in Spark
+# tasks. It bounds time, not memory: the driver encoder is single-threaded,
+# so past some size the parallel tasks win. Measured on a 4-core host, one
+# process, seed-7 `generate_transcripts` parquet, median of 3 warm builds,
+# Spark path -> driver path (s): 5,000 rows 1.16 -> 0.48; 10,000 1.09 ->
+# 0.61; 16,384 1.16 -> 1.06; 20,000 1.22 -> 1.29; 30,000 1.52 -> 2.03;
+# 50,000 1.76 -> 3.04. The cap is the largest size measured where the
+# driver path was not slower.
+LOCAL_BUILD_MAX_ROWS = 4 * BLOCK_RANGE
 
 KEYS = ["conv_id", "turn_idx"]
 
@@ -387,9 +406,22 @@ def _build_part(
     return _Part(n_docs, [field_sum_dl[f] for f in INDEXED_FIELDS], term_df, dv)
 
 
+class _Clock:
+    """Wall seconds of a build's stages, for `SegmentMeta.metrics`."""
+
+    def __init__(self):
+        self.start = self.last = time.perf_counter()
+        self.stage_sec: dict[str, float] = {}
+
+    def lap(self, stage: str) -> None:
+        now = time.perf_counter()
+        self.stage_sec[stage] = round(now - self.last, 3)
+        self.last = now
+
+
 def _finish_segment(
-    store: SegmentStore, seg_id: str, slice_id: str, parts: list[_Part], t_start: float,
-    partition_rows: list[int],
+    store: SegmentStore, seg_id: str, slice_id: str, parts: list[_Part], partition_rows: list[int],
+    path: str, clock: _Clock,
 ) -> SegmentMeta:
     """Driver side of a build: sum the parts' term counts into one sorted
     term dictionary and merge their dv rows into one sorted dv block index
@@ -408,6 +440,7 @@ def _finish_segment(
         dv.sort_by([("col", "ascending"), ("val", "ascending"), ("bk", "ascending")]),
         DV_STATS_SCHEMA,
     )
+    clock.lap("dict_dv_write")
     return SegmentMeta(
         segment_id=seg_id,
         n_docs=sum(p.n_docs for p in parts),
@@ -419,7 +452,10 @@ def _finish_segment(
             # per-partition lineage/metrics (north rule): rows each key range
             # held, in partition-id order, + build wall time
             "partition_rows": partition_rows,
-            "build_sec": round(time.perf_counter() - t_start, 3),
+            # "driver" or "spark", and the seconds of each stage the path ran
+            "build_path": path,
+            "stage_sec": clock.stage_sec,
+            "build_sec": round(time.perf_counter() - clock.start, 3),
         },
         field_sum_dl={f: sum(p.field_sum_dl[i] for p in parts) for i, f in enumerate(INDEXED_FIELDS)},
     )
@@ -452,19 +488,30 @@ def build_segment(
 ) -> SegmentMeta:
     """Build one immutable segment from a transcripts slice.
 
-    The slice is range-partitioned by (conv_id, turn_idx) into P key ranges,
-    and each Spark task runs `_build_part` over its range, writing one docs
-    and one postings part file. P is `partitions` (default: the default
-    parallelism), lowered to ceil(n / BLOCK_RANGE) and raised to
-    ceil(n / MAX_LOCAL_ROWS). Part i's first ordinal is
-    the block-rounded row count of the ranges before it. Spark jobs: the row
-    count, the range sample and per-range counts over the cached ranges, and
-    the encode."""
+    A slice of at most LOCAL_BUILD_MAX_ROWS rows is built on the driver: one
+    limited collect (`limit(cap + 1).toArrow()`, Spark's only work), then the
+    encode it shares with `build_segment_local`; the segment has one part and
+    dense ordinals, and `partitions` is not used.
+
+    A larger slice, the rows of that collect discarded, is range-partitioned
+    by (conv_id, turn_idx) into P key ranges, and each Spark task runs
+    `_build_part` over its range, writing one docs and one postings part
+    file. P is `partitions` (default: the default parallelism), lowered to
+    ceil(n / BLOCK_RANGE) and raised to ceil(n / MAX_LOCAL_ROWS). Part i's
+    first ordinal is the block-rounded row count of the ranges before it.
+    Spark jobs: the limited collect, the row count, the range sample and
+    per-range counts over the cached ranges, and the encode."""
     from pyspark import StorageLevel, TaskContext
 
-    t_start = time.perf_counter()
-    seg_id = store.new_segment_id()
+    clock = _Clock()
     slice_df = slice_df.select(*DOC_COLS)
+    docs_schema = _docs_schema(slice_df.schema)
+    head = slice_df.limit(LOCAL_BUILD_MAX_ROWS + 1).toArrow()
+    clock.lap("collect")
+    if head.num_rows <= LOCAL_BUILD_MAX_ROWS:
+        return _build_on_driver(store, docs_schema, head, slice_id, clock)
+
+    seg_id = store.new_segment_id()
     n = slice_df.count()
     p = max(
         min(partitions or spark.sparkContext.defaultParallelism, -(-n // BLOCK_RANGE)),
@@ -482,9 +529,9 @@ def build_segment(
     for pid in sorted(counts):
         firsts[pid] = acc
         acc += -(-counts[pid] // BLOCK_RANGE) * BLOCK_RANGE
-    docs_schema = _docs_schema(slice_df.schema)
     empty = to_arrow_schema(slice_df.schema).empty_table()
     part_arrow = to_arrow_schema(_PART_SCHEMA)
+    clock.lap("partition")
 
     def encode(batches):
         pid = TaskContext.get().partitionId()
@@ -509,22 +556,29 @@ def build_segment(
         )
         for r in collected
     ]
+    clock.lap("encode_write")
     return _finish_segment(
-        store, seg_id, slice_id, parts, t_start, [counts[k] for k in sorted(counts)]
+        store, seg_id, slice_id, parts, [counts[k] for k in sorted(counts)], "spark", clock
     )
 
 
-def build_segment_local(store: SegmentStore, rows: pa.Table, slice_id: str) -> SegmentMeta:
-    """`build_segment` on the driver, for a batch small enough to hold there
-    (at most MAX_LOCAL_ROWS rows, such as an update batch): `_build_part`
-    runs once, over the whole batch, with no Spark job. `rows` holds
-    DOC_COLS; its Arrow schema (types and nullability) gives the docs
-    table's."""
-    t_start = time.perf_counter()
+def _build_on_driver(
+    store: SegmentStore, docs_schema: T.StructType, rows: pa.Table, slice_id: str, clock: _Clock
+) -> SegmentMeta:
+    """`_build_part` once, over all of `rows`, from ordinal 0: one part."""
     seg_id = store.new_segment_id()
-    docs_schema = _docs_schema(from_arrow_schema(rows.select(DOC_COLS).schema))
     part = _build_part(store, seg_id, docs_schema, rows, 0, 0)
-    return _finish_segment(store, seg_id, slice_id, [part], t_start, [part.n_docs])
+    clock.lap("encode_write")
+    return _finish_segment(store, seg_id, slice_id, [part], [part.n_docs], "driver", clock)
+
+
+def build_segment_local(store: SegmentStore, rows: pa.Table, slice_id: str) -> SegmentMeta:
+    """`build_segment`'s driver path for rows already on the driver (at most
+    MAX_LOCAL_ROWS of them, such as an update batch): no Spark job. `rows`
+    holds DOC_COLS; its Arrow schema (types and nullability) gives the docs
+    table's."""
+    docs_schema = _docs_schema(from_arrow_schema(rows.select(DOC_COLS).schema))
+    return _build_on_driver(store, docs_schema, rows, slice_id, _Clock())
 
 
 def build_index(

@@ -9,11 +9,12 @@ old snapshot keep seeing the pre-merge segments (soft deletes / point-in-time
 readers, InternalEngine.java:180,238).
 
 Spark-first design: a merge REBUILDS the union of the input segments' live
-docs through the same build as indexing (`build_segment`: each Spark task
-encodes one key range of the live docs). Unlike Lucene we hold the original
-`_source` rows in columnar form, so re-analysis is a narrow scan + the
-build's range partitioning, and buys two invariants that a postings-remap
-merge cannot give:
+docs through the same build as indexing (`build_segment`: live docs of at
+most LOCAL_BUILD_MAX_ROWS rows are collected and encoded on the driver, more
+are encoded by Spark tasks, one key range each). Unlike Lucene we hold the
+original `_source` rows in columnar form, so re-analysis is a narrow scan
+plus the build's encode, and buys two invariants that a postings-remap merge
+cannot give:
   * merged segment == fresh build of the same docs, bit-for-bit (property
     tested), because there is exactly one build path;
   * ordinals stay globally (conv_id, turn_idx)-ordered, which keeps BM25

@@ -34,16 +34,19 @@ searches.
 
 from __future__ import annotations
 
+import functools
 import math
+from collections.abc import Callable
 from dataclasses import dataclass, field
 
 import pandas as pd
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from ..functions import analysis, scoring
-from ..sources.segment_store import SegmentStore, Snapshot, read_point, read_spark
+from ..sources.segment_store import SegmentStore, Snapshot, footer_schema, read_point, read_spark
 from .index_build import BLOCK_RANGE, INDEXED_FIELDS, KEYWORD_FIELDS, kw_field
 
 BUCKET_BLOCKS = 64  # blocks per kernel group: intra-segment parallelism unit
@@ -438,9 +441,10 @@ def expand_terms(
 class _Lowerer:
     """ES query dict -> (score tree, channels). Runs tiny stats jobs (term
     dictionary point reads, keyword df counts) exactly where ES's query
-    rewrite/Weight creation consults the terms dict and doc values."""
+    rewrite/Weight creation consults the terms dict and doc values. `docs`
+    returns the store's docs frame; only leaves that scan docs call it."""
 
-    def __init__(self, spark, store, snap, docs: DataFrame):
+    def __init__(self, spark, store, snap, docs: Callable[[], DataFrame]):
         self.spark, self.store, self.snap, self.docs = spark, store, snap, docs
         self.channels: list[Channel] = []
 
@@ -467,7 +471,7 @@ class _Lowerer:
                 # then lower like a literal terms filter
                 from ..plans.query_dsl import _Ctx, _terms_lookup
 
-                vs = _terms_lookup(_Ctx(self.docs, [], "text"), vs)
+                vs = _terms_lookup(_Ctx(self.docs(), [], "text"), vs)
                 if not vs:
                     return "false"
             lits = ", ".join(f"'{v}'" if isinstance(v, str) else str(v) for v in vs)
@@ -553,7 +557,7 @@ class _Lowerer:
             dfs = {v: stats.get((kwf, v), 0) for v in values}
         if dfs is None:
             rows = (
-                self.docs.where(F.col(col).isin(values))
+                self.docs().where(F.col(col).isin(values))
                 .groupBy(col).agg(F.count(F.lit(1)).alias("df")).collect()
             )
             dfs = {r[0]: int(r[1]) for r in rows}
@@ -662,7 +666,7 @@ class _Lowerer:
         idc = F.concat_ws("#", F.col("conv_id").cast("string"), F.col("turn_idx").cast("string"))
         liked_tok = None
         if like_ids:
-            liked_tok = self.docs.where(idc.isin(like_ids)).select(
+            liked_tok = self.docs().where(idc.isin(like_ids)).select(
                 F.explode(analysis.tokens(field_)).alias("term")
             )
         if like_texts:
@@ -1133,7 +1137,7 @@ def _anchored(node) -> bool:
     raise TypeError(type(node))
 
 
-def lower_query(spark, store, snap, docs: DataFrame, query: dict):
+def lower_query(spark, store, snap, docs: Callable[[], DataFrame], query: dict):
     """Lower an ES query dict to a KernelPlan (postings-anchored) or a
     DocsPlan (pure doc-values). Raises ValueError for shapes neither plan can
     express (those run the logical path)."""
@@ -2072,11 +2076,12 @@ def _dv_block_pred(spark, store, snap, nq: dict):
 
 
 def _channels_df(
-    docs: DataFrame, channels: list[Channel], del_df: DataFrame | None
+    spark: SparkSession, docs: DataFrame | None, channels: list[Channel], del_df: DataFrame | None
 ) -> DataFrame:
     """One docs scan emitting (segment, ordinal, fid, val) rows for every
     channel (rows exist only where the expr is non-null — allow channels use
-    CASE WHEN pred THEN 1.0 END). Deletes ride fid = DENY_FID."""
+    CASE WHEN pred THEN 1.0 END). Deletes ride fid = DENY_FID. `docs` is
+    read only when there are channels."""
     parts = []
     if channels:
         arr = F.array(
@@ -2101,20 +2106,39 @@ def _channels_df(
             )
         )
     if not parts:
-        # an empty local relation: no rows, and no scan or Python task behind it
-        return docs.select(
-            "segment", "ordinal", F.lit(0).alias("fid"), F.lit(0.0).alias("val")
-        ).where(F.lit(False))
+        return _empty_frame(spark, _CHANNEL_ROWS)
     out = parts[0]
     for p in parts[1:]:
         out = out.unionByName(p)
     return out
 
 
-def _empty_result(docs: DataFrame) -> DataFrame:
-    return docs.select(
-        "conv_id", "turn_idx", F.lit(0.0).alias("score")
-    ).where(F.lit(False))
+_CHANNEL_ROWS = T.StructType(
+    [
+        T.StructField("segment", T.StringType()),
+        T.StructField("ordinal", T.LongType()),
+        T.StructField("fid", T.IntegerType()),
+        T.StructField("val", T.DoubleType()),
+    ]
+)
+
+
+def _empty_frame(spark: SparkSession, schema: T.StructType) -> DataFrame:
+    """An empty local relation: no rows, and no scan, job or Python task
+    behind it. (From an empty list or pandas frame, Spark would build an
+    RDD, whose collect runs a job and whose join adds a stage.)"""
+    return spark.createDataFrame(to_arrow_schema(schema).empty_table())
+
+
+def _result_schema(store: SegmentStore, snap: Snapshot) -> T.StructType:
+    """(conv_id, turn_idx, score) with the docs tables' key types, read from
+    a parquet footer: no data and no docs frame."""
+    docs = footer_schema(store.docs_path(snap.segments[0].segment_id))
+    return T.StructType([docs["conv_id"], docs["turn_idx"], T.StructField("score", T.DoubleType())])
+
+
+def _empty_result(spark: SparkSession, store: SegmentStore, snap: Snapshot) -> DataFrame:
+    return _empty_frame(spark, _result_schema(store, snap))
 
 
 def _order_cols():
@@ -2184,7 +2208,9 @@ def search_indexed(
     snap = store.snapshot(snapshot_id)
     if snap is None or not snap.segments:
         raise ValueError("empty index")
-    docs = read_segment_docs(spark, store, snap)
+    # the docs frame costs a file listing per segment: build it only for the
+    # plans that scan docs (lowering leaves, channels, DocsPlan, fallback)
+    docs = functools.cache(lambda: read_segment_docs(spark, store, snap))
 
     from ..plans.query_dsl import normalize_query
 
@@ -2193,7 +2219,7 @@ def search_indexed(
     if kind in ("match_all", "match_none") or (
         kind == "bool" and not any(nq["bool"].get(x) for x in ("must", "filter", "should", "must_not"))
     ):
-        base = docs if kind != "match_none" else docs.where(F.lit(False))
+        base = docs() if kind != "match_none" else docs().where(F.lit(False))
         base = _apply_deletes(spark, store, snap, base)
         # constant 1.0 per hit — the logical path (Compiled.as_scored 1.0)
         # and the oracle (_pred_sql) both score match_all 1.0
@@ -2221,7 +2247,7 @@ def search_indexed(
             IndexedFallbackWarning,
             stacklevel=3,
         )
-        base = _apply_deletes(spark, store, snap, docs)
+        base = _apply_deletes(spark, store, snap, docs())
         return Q.search(base, nq, ["conv_id", "turn_idx"], k=k)
 
     try:
@@ -2239,7 +2265,7 @@ def search_indexed(
             pred, score = _docs_eval(plan.tree, plan.channels)
         except ValueError as e:
             return _logical_fallback(str(e))
-        base = docs
+        base = docs()
         # docs-only numeric ranges answer from the dv block index first (the
         # BKD-points analog) so a selective turn_idx range reads O(matching
         # blocks), not O(corpus); `pred` still applies in full, so this is
@@ -2320,10 +2346,11 @@ def search_indexed(
 
     live_ft = [ft for ft in plan.ft_pairs if ft in dfs]
     if not live_ft:
-        return _empty_result(docs)
+        return _empty_result(spark, store, snap)
     postings = read_segment_postings(spark, store, snap, live_ft)
-    chan_docs = docs
+    chan_docs = None
     if plan.channels:
+        chan_docs = docs()
         # candidate-prune the channels scan: only docs in blocks that hold
         # query-term postings can match an anchored plan (every KernelPlan is
         # _anchored), so channel rows (function_score values, terms_set
@@ -2335,8 +2362,8 @@ def search_indexed(
         if blocks is not None:
             pred = _candidate_block_pred(blocks)
             if pred is not None:
-                chan_docs = docs.where(pred)
-    extras = _channels_df(chan_docs, plan.channels, del_df)
+                chan_docs = chan_docs.where(pred)
+    extras = _channels_df(spark, chan_docs, plan.channels, del_df)
     kernel = _make_kernel(plan.tree, weights, avgdl, k, plan.phrase_fts)
     local = run_kernel(postings, extras, kernel)
 
@@ -2347,7 +2374,7 @@ def search_indexed(
     # ordinal-sorted): O(k) reads, no Spark job.
     winners = local.collect()
     if not winners:
-        return _empty_result(docs)
+        return _empty_result(spark, store, snap)
     by_seg: dict[str, dict[int, float]] = {}
     for r in winners:
         by_seg.setdefault(r.segment, {})[r.ordinal] = r.score
@@ -2360,10 +2387,10 @@ def search_indexed(
         hits["conv_id"] += t["conv_id"]
         hits["turn_idx"] += t["turn_idx"]
         hits["score"] += [ordmap[o] for o in t["ordinal"]]
-    return _final_top_k(spark, docs, hits, k)
+    return _final_top_k(spark, _result_schema(store, snap), hits, k)
 
 
-def _final_top_k(spark: SparkSession, docs: DataFrame, hits: dict, k: int) -> DataFrame:
+def _final_top_k(spark: SparkSession, schema: T.StructType, hits: dict, k: int) -> DataFrame:
     """The coordinator's merge of the fetched winners (`hits`: conv_id,
     turn_idx and score columns) into the top k, in the order `_order_cols`
     defines, as a driver-local frame.
@@ -2372,11 +2399,8 @@ def _final_top_k(spark: SparkSession, docs: DataFrame, hits: dict, k: int) -> Da
     a projection over a local relation, which Spark folds on the driver
     without a job; only the sort on (rounded score desc, conv_id, turn_idx)
     runs in Python. Frames built from pandas go through Arrow into a local
-    relation, so collecting the result runs no job either."""
-    cols = {f.name: f for f in docs.schema.fields}
-    schema = T.StructType(
-        [cols["conv_id"], cols["turn_idx"], T.StructField("score", T.DoubleType())]
-    )
+    relation, so collecting the result runs no job either. `schema` is the
+    result's (`_result_schema`)."""
     rounded = (
         spark.createDataFrame(pd.DataFrame(hits), schema)
         .select("conv_id", "turn_idx", F.round("score", 6), F.round("score", 4))

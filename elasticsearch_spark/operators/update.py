@@ -30,8 +30,11 @@ segment are written with pyarrow (`write_local`, `build_segment_local`), and
 the images are driver-local frames, so the whole update runs at most the one
 job that collects the batch. A larger batch, too big to hold on the driver,
 runs as Spark joins and `build_segment`; it first pays for the collect that
-found it too big. LOCAL_UPDATE_MAX_ROWS is the build's MAX_LOCAL_ROWS, the
-most rows one Python process encodes at once.
+found it too big. Its new segment is over the build's own driver cap
+(LOCAL_BUILD_MAX_ROWS, which is below this one), so `build_segment` pays a
+second limited collect and then encodes in Spark tasks.
+LOCAL_UPDATE_MAX_ROWS is the build's MAX_LOCAL_ROWS, the most rows one Python
+process encodes at once.
 """
 
 from __future__ import annotations

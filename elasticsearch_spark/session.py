@@ -11,6 +11,9 @@ import os
 
 from pyspark.sql import SparkSession
 
+# the directory that holds the `elasticsearch_spark` package
+_PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 
 def _tune_worker_malloc() -> None:
     """Keep glibc from mmap'ing/munmap'ing large numpy buffers in the Python
@@ -58,6 +61,10 @@ def get_spark(
         # Python workers too (local mode inherits the driver env instead)
         .config("spark.executorEnv.MALLOC_MMAP_THRESHOLD_", str(1 << 30))
         .config("spark.executorEnv.MALLOC_TRIM_THRESHOLD_", str(1 << 30))
+        # the Python workers import this package to run the build's and the
+        # kernel's functions; put its root on their path, wherever the
+        # driver script runs from (Spark adds the worker's own PYTHONPATH)
+        .config("spark.executorEnv.PYTHONPATH", _PACKAGE_ROOT)
     )
     for k, v in (extra_conf or {}).items():
         b = b.config(k, v)

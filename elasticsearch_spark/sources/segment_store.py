@@ -20,9 +20,9 @@ InternalEngine.java:889-968) AND of Iceberg snapshots for time-travel:
 Every table is a parquet directory in Spark's layout (`part-*.parquet`
 data files plus a `_SUCCESS` marker, the Spark schema in each footer). One
 pyarrow writer, `write_local`, produces the segment tables: each Spark task
-of a build writes its own part file of the docs and postings, and the driver
-writes the term dictionary, the dv block index, and the tables and delete
-file of a small update batch. Spark's DataFrame writer writes only the
+of a large build writes its own part file of the docs and postings, and the
+driver writes the term dictionary, the dv block index, every table of a small
+segment, and the delete file of a small update batch. Spark's DataFrame writer writes only the
 delete files of Spark-side updates and deletes. Reads come in two kinds (see
 the bottom of this module): the tables a query scans in bulk (docs,
 postings, delete files) are Spark DataFrames whose schema comes from the

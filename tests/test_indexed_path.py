@@ -4,12 +4,13 @@ property from SURVEY.md §5.3), plus segment/resume invariants."""
 from __future__ import annotations
 
 import pytest
-from conftest import spark_jobs
+from conftest import assert_ordinal_layout, spark_jobs
 from pyspark.sql import functions as F
 
 from elasticsearch_spark.operators import index_build, topk, update
 from elasticsearch_spark.plans import query_dsl as Q
 from elasticsearch_spark.sources import segment_store
+from elasticsearch_spark.sources.transcripts import generate_transcripts
 
 KEYS = ["conv_id", "turn_idx"]
 
@@ -125,13 +126,18 @@ def test_doc_roundtrip_text_equality(spark, transcripts, store):
     assert got == want
 
 
-def test_ordinals_dense_and_key_ordered(spark, store):
-    snap = store.snapshot()
-    docs = topk.read_segment_docs(spark, store, snap)
-    rows = docs.orderBy("ordinal").select("ordinal", "conv_id", "turn_idx").collect()
-    assert [r.ordinal for r in rows] == list(range(len(rows)))
-    keys = [(r.conv_id, r.turn_idx) for r in rows]
-    assert keys == sorted(keys)
+def test_ordinals_dense_and_key_ordered(spark, store, tmp_path, monkeypatch):
+    """The fixture store is built on the driver: dense ordinals in key
+    order. A two-block slice built by Spark tasks (a zero driver cap) keeps
+    key order, and its second part starts on a block boundary."""
+    (meta,) = store.snapshot().segments
+    assert assert_ordinal_layout(store, meta) == "driver"
+    monkeypatch.setattr(index_build, "LOCAL_BUILD_MAX_ROWS", 0)
+    spark_store = segment_store.SegmentStore(str(tmp_path))
+    df = generate_transcripts(spark, index_build.BLOCK_RANGE + 300, seed=5, partitions=2)
+    meta = index_build.build_segment(spark, spark_store, df, "s", partitions=2)
+    assert meta.metrics["partitions"] == 2
+    assert assert_ordinal_layout(spark_store, meta) == "spark"
 
 
 MATCHING = {"match": {"text": "spark query fast"}}
@@ -142,6 +148,23 @@ def test_matching_query_runs_only_the_kernel_jobs(spark, store):
     rows, jobs = spark_jobs(spark, lambda: topk.search_indexed(spark, store, MATCHING).collect())
     assert len(rows) == 10
     assert jobs <= KERNEL_JOBS
+
+
+def test_channel_less_queries_build_no_docs_frame(spark, store, monkeypatch):
+    """A kernel query without channels, and a query whose terms are not in
+    the dictionary, never build the docs frame: the key types come from a
+    parquet footer. The empty result is a local relation: no Spark job."""
+    want = _rows(topk.search_indexed(spark, store, MATCHING))
+
+    def boom(*a, **k):
+        raise AssertionError("built the docs frame")
+
+    monkeypatch.setattr(topk, "read_segment_docs", boom)
+    assert _rows(topk.search_indexed(spark, store, MATCHING)) == want
+    none = topk.search_indexed(spark, store, {"match": {"text": "zzqx"}})
+    rows, jobs = spark_jobs(spark, none.collect)
+    assert (rows, jobs) == ([], 0)
+    assert none.schema == topk.search_indexed(spark, store, MATCHING).schema
 
 
 def test_job_count_does_not_grow_with_segments(spark, transcripts, tmp_path_factory):

@@ -20,7 +20,7 @@ import time
 import pandas as pd
 import pyarrow.parquet as pq
 import pytest
-from conftest import spark_jobs
+from conftest import assert_ordinal_layout, spark_jobs
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from test_indexed_path import INDEXED_QUERIES
@@ -78,15 +78,14 @@ class TestMerge:
         assert _rows(topk.search_indexed(spark, store4, Q_OR, k=10, snapshot_id=pre_snap_id)) == pre_or
 
     def test_merged_segment_ordinals_key_ordered(self, spark, store4):
+        """The fixture's merge is small, so it is built on the driver: dense
+        ordinals in key order (`test_spark_path_merge_equals_fresh_build`
+        checks a merge built by Spark tasks)."""
         merge.compact(spark, store4, partitions=4)
         snap = store4.snapshot()
         merged = [s for s in snap.segments if s.slice_id.startswith("merge(")]
         assert merged
-        d = spark.read.parquet(store4.docs_path(merged[0].segment_id))
-        rows = d.orderBy("ordinal").select("ordinal", *KEYS).collect()
-        assert [r.ordinal for r in rows] == list(range(len(rows)))
-        keys = [(r.conv_id, r.turn_idx) for r in rows]
-        assert keys == sorted(keys)
+        assert assert_ordinal_layout(store4, merged[0]) == "driver"
 
     def test_merge_drops_delete_files_of_merged_segments(self, spark, transcripts, tmp_path):
         store = index_build.build_index(spark, transcripts, str(tmp_path), n_slices=3, partitions=2)
@@ -283,10 +282,12 @@ def _odd_slice(spark, transcripts):
     ["fixture_304", "generated_two_blocks"],
 )
 def test_part_count_keeps_answers(spark, transcripts, tmp_path, corpus):
-    """A build answers every query the same with 1, 2 or 4 requested
-    partitions and on the driver: same rows and scores, n_docs, field sums
-    and footer schemas. Each part starts on a block boundary and no postings
-    block appears twice."""
+    """A build answers every query the same on the Spark path with 1, 2 or 4
+    requested partitions (forced by a zero driver cap), on `build_segment`'s
+    driver path and through `build_segment_local`: same rows and scores,
+    n_docs, field sums and footer schemas. Each part starts on a block
+    boundary, driver-built ordinals are dense, and no postings block appears
+    twice."""
     if corpus == "fixture_304":
         slice_df, queries = _odd_slice(spark, transcripts), INDEXED_QUERIES
     else:
@@ -295,13 +296,18 @@ def test_part_count_keeps_answers(spark, transcripts, tmp_path, corpus):
     slice_df = slice_df.cache()
     n = slice_df.count()
     stores = {}
-    for parts in (1, 2, 4, "local"):
+    for parts in (1, 2, 4, "driver", "local"):
         store = segment_store.SegmentStore(str(tmp_path / str(parts)))
         if parts == "local":
             meta = index_build.build_segment_local(store, slice_df.toArrow(), "s")
+        elif parts == "driver":
+            meta = index_build.build_segment(spark, store, slice_df, "s", partitions=4)
         else:
-            meta = index_build.build_segment(spark, store, slice_df, "s", partitions=parts)
+            with pytest.MonkeyPatch.context() as mp:
+                mp.setattr(index_build, "LOCAL_BUILD_MAX_ROWS", 0)
+                meta = index_build.build_segment(spark, store, slice_df, "s", partitions=parts)
             assert meta.metrics["partitions"] == min(parts, -(-n // index_build.BLOCK_RANGE))
+        assert meta.metrics["build_path"] == ("spark" if isinstance(parts, int) else "driver")
         store.commit([meta], "append")
         stores[parts] = (store, meta)
     slice_df.unpersist()
@@ -319,25 +325,54 @@ def test_part_count_keeps_answers(spark, transcripts, tmp_path, corpus):
             assert _footer(getattr(store, table)(meta.segment_id)) == _footer(
                 getattr(want_store, table)(want_meta.segment_id)
             ), (parts, table)
-        files = segment_store._data_files(store.docs_path(meta.segment_id))
-        last_key = None
-        for f in files:
-            t = pq.read_table(f, columns=["ordinal", *KEYS])
-            assert t["ordinal"][0].as_py() % index_build.BLOCK_RANGE == 0, (parts, f)
-            keys = list(zip(t["conv_id"].to_pylist(), t["turn_idx"].to_pylist()))
-            assert keys == sorted(keys) and (last_key is None or last_key < keys[0])
-            last_key = keys[-1]
+        assert_ordinal_layout(store, meta)
         blocks = segment_store.read_point(store.postings_path(meta.segment_id), ["field", "term", "bk"], None)
         assert blocks.group_by(["field", "term", "bk"]).aggregate([]).num_rows == blocks.num_rows
         if parts != "local":
             assert answers(store) == want, parts
 
 
-def test_build_runs_fewer_spark_jobs(spark, transcripts, tmp_path):
+def test_small_build_runs_on_driver(spark, transcripts, tmp_path):
+    """A slice within the driver cap costs one limited collect: one part,
+    its stages timed in the metrics."""
+    store = segment_store.SegmentStore(str(tmp_path))
+    meta, jobs = spark_jobs(spark, lambda: index_build.build_segment(spark, store, transcripts, "s"))
+    n = transcripts.count()
+    assert meta.n_docs == n
+    assert jobs <= 2
+    assert meta.metrics["build_path"] == "driver"
+    assert (meta.metrics["partitions"], meta.metrics["partition_rows"]) == (1, [n])
+    assert set(meta.metrics["stage_sec"]) == {"collect", "encode_write", "dict_dv_write"}
+
+
+def test_spark_build_runs_fewer_spark_jobs(spark, transcripts, tmp_path, monkeypatch):
+    monkeypatch.setattr(index_build, "LOCAL_BUILD_MAX_ROWS", 0)
     store = segment_store.SegmentStore(str(tmp_path))
     meta, jobs = spark_jobs(spark, lambda: index_build.build_segment(spark, store, transcripts, "s"))
     assert meta.n_docs == transcripts.count()
     assert jobs < 13
+    assert meta.metrics["build_path"] == "spark"
+    assert set(meta.metrics["stage_sec"]) == {"collect", "partition", "encode_write", "dict_dv_write"}
+
+
+def test_spark_path_merge_equals_fresh_build(spark, tmp_path, monkeypatch):
+    """Segments built and merged by Spark tasks (a zero driver cap) answer
+    like a fresh driver-built segment of the same rows, and the merged
+    segment keeps key order with block-aligned part starts."""
+    df = TR.generate_transcripts(spark, index_build.BLOCK_RANGE + 300, seed=5, partitions=2).cache()
+    fresh = index_build.build_index(spark, df, str(tmp_path / "fresh"))
+    assert fresh.snapshot().segments[0].metrics["build_path"] == "driver"
+    monkeypatch.setattr(index_build, "LOCAL_BUILD_MAX_ROWS", 0)
+    store = index_build.build_index(spark, df, str(tmp_path / "merged"), n_slices=2, partitions=2)
+    meta, _ = merge.merge_segments(
+        spark, store, [s.segment_id for s in store.snapshot().segments], partitions=2
+    )
+    df.unpersist()
+    assert meta.metrics["partitions"] == 2
+    assert assert_ordinal_layout(store, meta) == "spark"
+    for qd in GENERATED_QUERIES:
+        want = _rows(topk.search_indexed(spark, fresh, qd, k=10))
+        assert want and _rows(topk.search_indexed(spark, store, qd, k=10)) == want, qd
 
 
 def test_analyze_matches_spark_tokens(spark, sf_dir):

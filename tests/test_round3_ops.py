@@ -195,7 +195,7 @@ class TestKeywordPostings:
         snap = store.snapshot()
         docs = topk.read_segment_docs(spark, store, snap)
         for qd in ({"term": {"role": "user"}}, {"terms": {"tool": ["search", "code"]}}):
-            plan = topk.lower_query(spark, store, snap, docs, qd)
+            plan = topk.lower_query(spark, store, snap, lambda: docs, qd)
             assert isinstance(plan, topk.KernelPlan), qd
             assert not plan.channels, qd  # no docs-scan channels at all
 
@@ -273,7 +273,7 @@ class TestChannelPruning:
                 ],
             }
         }
-        plan = topk.lower_query(spark, store, snap, docs, qd)
+        plan = topk.lower_query(spark, store, snap, lambda: docs, qd)
         assert isinstance(plan, topk.KernelPlan) and plan.channels
         postings = topk.read_segment_postings(spark, store, snap, plan.ft_pairs)
         blocks = [

@@ -403,7 +403,7 @@ class TestDvBlockPruning:
         docs = topk.read_segment_docs(spark, dv_store, snap)
         for name, qd in {**SEARCH_QUERIES, **INTERVALS_QUERIES, **SPAN_QUERIES}.items():
             nq = Q.normalize_query(qd)
-            topk.lower_query(spark, dv_store, snap, docs, nq)  # must not raise
+            topk.lower_query(spark, dv_store, snap, lambda: docs, nq)  # must not raise
 
         # dis_max over filter-context leaves has no kernel/doc-values lowering
         odd = {

@@ -271,7 +271,7 @@ class TestKeywordDfFromDictionary:
         from elasticsearch_spark.operators import topk
 
         snap = store.snapshot()
-        low = topk._Lowerer(spark, store, snap, transcripts)
+        low = topk._Lowerer(spark, store, snap, lambda: transcripts)
 
         def boom(*a, **k):
             raise AssertionError("keyword df took a docs-column scan")

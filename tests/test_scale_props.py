@@ -15,15 +15,19 @@ from elasticsearch_spark.sources.transcripts import generate_transcripts
 KEYS = ["conv_id", "turn_idx"]
 
 
-def test_hot_term_spreads_across_block_keys(spark, tmp_path_factory):
+def test_hot_term_spreads_across_block_keys(spark, tmp_path_factory, monkeypatch):
     """The north rule's skew handling: a term present in most docs spreads
     over multiple (term, bk) postings rows, each block bounded by
     BLOCK_RANGE postings — the build's key ranges each encode their own
-    blocks, so no single task owns a whole hot term."""
+    blocks, so no single task owns a whole hot term. A zero driver cap sends
+    this slice to the Spark tasks."""
+    monkeypatch.setattr(index_build, "LOCAL_BUILD_MAX_ROWS", 0)
     root = str(tmp_path_factory.mktemp("skew_idx"))
     df = generate_transcripts(spark, 10000, partitions=8)
     store = index_build.build_index(spark, df, root, n_slices=1, partitions=8)
     snap = store.snapshot()
+    assert snap.segments[0].metrics["build_path"] == "spark"
+    assert snap.segments[0].metrics["partitions"] > 1
     postings = spark.read.parquet(store.postings_path(snap.segments[0].segment_id))
     hot = (
         postings.groupBy("term")
