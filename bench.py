@@ -7,8 +7,8 @@ Default mode — one JSON line on stdout:
   * a BM25 query suite over the built segment store: perfbench's query mix
     (`perfbench.inputs.query_mix`), whose terms are picked by measured df
     from the corpus's own `w<rank>` vocabulary, so every query matches.
-    Per-query latency + p50; a query that returns fewer than k rows fails
-    the run.
+    Per-query latency + p50, and each query's Spark job count; a query that
+    returns fewer than k rows fails the run.
 
 `--scaling` mode — the north rule's two-cluster-size criterion evidenced on
 one machine: the same build job at two parallelism levels (local[N] vs
@@ -35,6 +35,7 @@ from pyspark.sql import SparkSession  # noqa: E402
 
 from elasticsearch_spark.operators import index_build, topk  # noqa: E402
 from elasticsearch_spark.queryset import DEFAULT_K  # noqa: E402
+from elasticsearch_spark.session import spark_jobs  # noqa: E402
 from elasticsearch_spark.sources.transcripts import generate_transcripts  # noqa: E402
 from perfbench import inputs  # noqa: E402
 
@@ -132,6 +133,13 @@ def _calibrate() -> float:
     return time.perf_counter() - t0
 
 
+def _timed_search(spark: SparkSession, store, q: dict) -> tuple[list, float]:
+    """One mix query's result rows and wall seconds."""
+    t0 = time.perf_counter()
+    rows = topk.search_indexed(spark, store, q["query"], k=DEFAULT_K).collect()
+    return rows, time.perf_counter() - t0
+
+
 def run_default() -> dict:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
@@ -175,19 +183,20 @@ def run_default() -> dict:
             "build_from_in_band_trials": len(in_band),
         }
         q_times: dict[str, float] = {}
+        q_jobs: dict[str, int] = {}
         mix = inputs.query_mix(inputs.term_dfs(_corpus(spark, n_turns, cpus)), QUERY_SEED)
         for q in mix:
             # best-of-trials steady state (first run pays postings-file open)
             best = float("inf")
             for _ in range(QUERY_TRIALS):
-                t0 = time.perf_counter()
-                rows = topk.search_indexed(spark, store, q["query"], k=DEFAULT_K).collect()
-                best = min(best, time.perf_counter() - t0)
+                (rows, sec), jobs = spark_jobs(spark, lambda: _timed_search(spark, store, q))
+                best = min(best, sec)
                 if len(rows) < DEFAULT_K:
                     raise RuntimeError(
                         f"bench query {q['name']} returned {len(rows)} < {DEFAULT_K} rows"
                     )
             q_times[q["name"]] = round(best, 4)
+            q_jobs[q["name"]] = jobs
         calibration["query_window_calib_sec"] = round(_calibrate(), 3)
         lat = sorted(q_times.values())
         p50 = lat[len(lat) // 2]
@@ -197,6 +206,7 @@ def run_default() -> dict:
             "value": total,
             "unit": "sec",
             "queries": q_times,
+            "query_spark_jobs": q_jobs,
             "sf": sf,
             "n_turns": n_turns,
             "build_sec": round(build_s, 3),

@@ -14,16 +14,25 @@ Direct analog of the reference's query-then-fetch (SURVEY.md §3.1):
      every SearchModule.java-registered query the engine supports lowers to
      TermsLeaf / PhraseLeaf / ChannelLeaf composed under Bool / DisMax /
      ConstScore / FuncScore / Boosting nodes,
-  3. tiny per-group top-k unions merged by a global orderBy/limit — the
+  3. tiny per-group top-k unions merged on the coordinator — the
      SearchPhaseController.java:154-243 shard-merge analog,
   4. fetch phase = ordinal-pruned point reads of <= buckets*k winners from the
      docs tables (+ any _source columns).
 
+The kernel is one closure with two drivers. A query whose postings volume
+(the sum of df over its terms, known after step 1) is at most
+MAX_DRIVER_KERNEL_POSTINGS, over a snapshot without delete files, runs it on
+the driver (`run_kernel_on_driver`): pyarrow reads, pandas groups, no Spark
+job. Every other query cogroups postings and channel rows by (segment,
+bucket) in Spark (`run_kernel`), one Python task per group.
+
 Doc-field-dependent clauses (term/range filters, function_score field values,
 terms_set per-doc thresholds, boosting demotions) become CHANNELS: columnar
-(ordinal, value) reads of the docs tables cogrouped into the kernel by bucket
-— the Lucene doc-values / FieldData read path. Positional deletes from updates
-ride the same stream as a deny channel (liveDocs analog).
+(ordinal, value) reads of the docs tables grouped into the kernel by bucket
+— the Lucene doc-values / FieldData read path. Both drivers compute them with
+Spark SQL's own expressions: a docs scan on Spark, a projection over a local
+relation of the candidate blocks' docs rows on the driver. Positional deletes
+from updates ride the same stream as a deny channel (liveDocs analog).
 
 Queries whose scoring needs no postings at all (term/ids/range/exists-only,
 constant_score over filters, distance_feature) run a DOCS-ONLY plan: a
@@ -36,18 +45,22 @@ from __future__ import annotations
 
 import functools
 import math
+import re
 from collections.abc import Callable
 from dataclasses import dataclass, field
 
+import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.pandas.types import to_arrow_schema
 
 from ..functions import analysis, scoring
+from ..functions.codec import delta_decode
 from ..sources.segment_store import SegmentStore, Snapshot, footer_schema, read_point, read_spark
-from .index_build import BLOCK_RANGE, INDEXED_FIELDS, KEYWORD_FIELDS, kw_field
+from .index_build import BLOCK_RANGE, INDEXED_FIELDS, KEYWORD_FIELDS, POSTINGS_SCHEMA, kw_field
 
 BUCKET_BLOCKS = 64  # blocks per kernel group: intra-segment parallelism unit
 DENY_FID = -1  # channel id reserved for positional deletes
@@ -608,10 +621,20 @@ class _Lowerer:
         lead, pref = qterms[:-1], qterms[-1]
         # ES MatchQuery default: match_phrase_prefix truncates its trailing
         # expansion at max_expansions (50) silently, in term order
-        exps = expand_terms(
-            self.spark, self.store, self.snap, field_, "prefix", pref,
-            max_expansions=int(spec.get("max_expansions", DEFAULT_MAX_EXPANSIONS)),
-        )
+        max_exp = int(spec.get("max_expansions", DEFAULT_MAX_EXPANSIONS))
+        if self.snap.delete_files:
+            # the dictionary still holds terms that only deleted docs have,
+            # and one could take a capped slot: expand over the live view,
+            # as the logical twin does
+            from ..plans.query_dsl import phrase_prefix_expansions
+
+            live = _apply_deletes(self.spark, self.store, self.snap, self.docs())
+            exps = phrase_prefix_expansions(live, field_, pref, max_exp)
+        else:
+            exps = expand_terms(
+                self.spark, self.store, self.snap, field_, "prefix", pref,
+                max_expansions=max_exp,
+            )
         return PhraseLeaf(field=field_, terms=lead, prefix_expansions=exps)
 
     def expansion_leaf(
@@ -1936,7 +1959,10 @@ def _make_kernel(spec_tree, weights, avgdl, k, phrase_fts):
 
 
 def run_kernel(postings: DataFrame, extras: DataFrame, kernel) -> DataFrame:
-    """Cogroup postings + channel rows by (segment, bucket), run the kernel."""
+    """The kernel's Spark driver: cogroup postings + channel rows by
+    (segment, bucket) and run `kernel` once per group in a Python worker.
+    `run_kernel_on_driver` is its other driver, for queries whose postings
+    are few; both call the same closure on the same groups."""
     pb = postings.withColumn("bucket", (F.col("bk") / BUCKET_BLOCKS).cast("int"))
     eb = extras.withColumn(
         "bucket", (F.col("ordinal") / (BLOCK_RANGE * BUCKET_BLOCKS)).cast("int")
@@ -1948,8 +1974,119 @@ def run_kernel(postings: DataFrame, extras: DataFrame, kernel) -> DataFrame:
     )
 
 
+def run_kernel_on_driver(
+    spark: SparkSession, store: SegmentStore, snap: Snapshot,
+    ft_pairs: list[tuple[str, str]], channels: list[Channel], kernel,
+) -> list[tuple[str, int, float]]:
+    """The kernel's other driver, on the Spark driver itself: read the
+    postings of `ft_pairs` with pyarrow, group them by (segment, bucket) in
+    pandas and call `kernel` once per group, as `run_kernel`'s cogroup does.
+    Runs no Spark job. Returns the winners as (segment, ordinal, score).
+    Snapshots with delete files never come here.
+
+    The kernel scores only docs that hold a postings row, so channel rows
+    are computed for those candidates alone (`_driver_channel_rows`): never
+    more docs rows than postings."""
+    cols = POSTINGS_SCHEMA.fieldNames()
+    filters = _ft_filters(ft_pairs)
+    parts = []
+    for seg in snap.segments:
+        t = read_point(store.postings_path(seg.segment_id), cols, filters).to_pandas()
+        if len(t):
+            t["segment"] = seg.segment_id
+            parts.append(t)
+    if not parts:
+        return []
+    left = pd.concat(parts, ignore_index=True)
+    right = _CHANNEL_ROWS_EMPTY
+    if channels:
+        candidates = {
+            seg: np.unique(np.concatenate([delta_decode(d) for d in g["docs"]]))
+            for seg, g in left.groupby("segment")
+        }
+        right = _driver_channel_rows(spark, store, snap, candidates, channels)
+    r_bucket = right["ordinal"].to_numpy(dtype=np.int64) // (BLOCK_RANGE * BUCKET_BLOCKS)
+    r_groups = {
+        (seg, int(bucket)): g.reset_index(drop=True)
+        for (seg, bucket), g in right.groupby([right["segment"], r_bucket])
+    }
+    l_bucket = left["bk"].to_numpy(dtype=np.int64) // BUCKET_BLOCKS
+    winners: list[tuple[str, int, float]] = []
+    for (seg, bucket), g in left.groupby([left["segment"], l_bucket]):
+        out = kernel(
+            g.reset_index(drop=True), r_groups.get((seg, int(bucket)), _CHANNEL_ROWS_EMPTY)
+        )
+        winners += zip(out["segment"], out["ordinal"].tolist(), out["score"].tolist())
+    return winners
+
+
+def _driver_channel_rows(
+    spark: SparkSession, store: SegmentStore, snap: Snapshot,
+    candidates: dict, channels: list[Channel],
+) -> pd.DataFrame:
+    """`_channels_df`'s (segment, ordinal, fid, val) rows for the
+    `candidates` ordinals of each segment, without a job: the docs columns
+    the channels name are read with pyarrow into a local relation, and each
+    channel's expression is a projection over it, which Spark folds on the
+    driver. The values are Spark SQL's own, as on the Spark path; rows whose
+    value is null are dropped."""
+    docs_schema = footer_schema(store.docs_path(snap.segments[0].segment_id))
+    # a column a channel names but this scan misses fails the projection
+    # loudly; a word match can only read too many columns, never too few
+    named = [
+        f for f in docs_schema.fields
+        if f.name == "ordinal"
+        or any(re.search(rf"\b{re.escape(f.name)}\b", ch.expr) for ch in channels)
+    ]
+    schema = T.StructType([*named, T.StructField("segment", T.StringType())])
+    arrow_schema = to_arrow_schema(schema)
+    tables = []
+    for seg, ords in candidates.items():
+        t = read_point(
+            store.docs_path(seg), [f.name for f in named], [("ordinal", "in", ords.tolist())]
+        )
+        t = t.append_column("segment", pa.array([seg] * t.num_rows, pa.string()))
+        tables.append(t.cast(arrow_schema))
+    docs = spark.createDataFrame(pa.concat_tables(tables), schema)
+    vals = [F.expr(ch.expr).cast("double").alias(f"c{i}") for i, ch in enumerate(channels)]
+    present = functools.reduce(
+        Column.__or__, [F.col(f"c{i}").isNotNull() for i in range(len(channels))]
+    )
+    wide = pd.DataFrame(
+        docs.select("segment", "ordinal", *vals).where(present).collect(),
+        columns=["segment", "ordinal", *(ch.fid for ch in channels)],
+    )
+    rows = wide.melt(["segment", "ordinal"], var_name="fid", value_name="val").dropna()
+    return rows.astype(_CHANNEL_ROWS_EMPTY.dtypes.to_dict())
+
+
 # --------------------------------------------------------------- execution
 MAX_CHANNEL_PRUNE_RANGES = 256  # fall back to a full scan past this
+
+# The most postings (the sum of df over a KernelPlan's terms) for which the
+# kernel runs on the driver (`run_kernel_on_driver`). The driver computes
+# channel rows only for docs that hold a postings row, so the cap bounds
+# those docs rows too. Snapshots with delete files take the Spark path
+# whatever the size. Set from a sweep on a 4-core host (generate_transcripts
+# seed 7, perfbench's query mix, median of 5 warm runs; Spark path -> driver
+# path in seconds, the query's postings in brackets):
+#   5k turns    hot_term [3.6k] 0.60->0.08  and3 [4.8k] 0.51->0.06
+#               phrase_hot2 [5.5k] 0.47->0.06  bool_filter_role [1.6k] 0.68->0.15
+#               bool_must_not_tool [2.2k] 0.66->0.11
+#   50k turns   hot_term [36k] 0.52->0.08  and3 [50k] 0.51->0.08
+#               phrase_hot2 [56k] 0.54->0.11  bool_filter_role [16k] 0.72->0.19
+#               bool_must_not_tool [23k] 0.71->0.24
+#   100k turns  hot_term [71k] 0.81->0.13  and3 [100k] 0.63->0.12
+#               phrase_hot2 [111k] 0.64->0.17  bool_filter_role [32k] 0.73->0.28
+#               bool_must_not_tool [45k] 0.73->0.46
+#   200k turns  hot_term [143k] 0.54->0.12  and3 [200k] 0.52->0.14
+#               phrase_hot2 [223k] 0.67->0.22  bool_filter_role [65k] 0.76->0.56
+#               bool_must_not_tool [90k] 0.79->0.74
+# Without channels the driver wins at every size measured. With channels it
+# pays ~7 us per candidate doc (a local relation of their docs rows, then a
+# collect) and breaks even near 90k postings. One cap serves both, so it
+# sits below that crossover.
+MAX_DRIVER_KERNEL_POSTINGS = 1 << 16
 
 
 def _candidate_block_pred(blocks: list[tuple[str, int]]):
@@ -2121,6 +2258,8 @@ _CHANNEL_ROWS = T.StructType(
         T.StructField("val", T.DoubleType()),
     ]
 )
+# no channel rows, as the kernel's `right` frame on the driver path
+_CHANNEL_ROWS_EMPTY = to_arrow_schema(_CHANNEL_ROWS).empty_table().to_pandas()
 
 
 def _empty_frame(spark: SparkSession, schema: T.StructType) -> DataFrame:
@@ -2347,9 +2486,28 @@ def search_indexed(
     live_ft = [ft for ft in plan.ft_pairs if ft in dfs]
     if not live_ft:
         return _empty_result(spark, store, snap)
+    kernel = _make_kernel(plan.tree, weights, avgdl, k, plan.phrase_fts)
+    # QUERY PHASE: one kernel, two drivers. A query whose postings are few
+    # (the df sum is known before any read) over a snapshot without delete
+    # files runs it on the driver: pyarrow reads, no Spark job. Everything
+    # else cogroups by (segment, bucket) on Spark.
+    if not snap.delete_files and sum(dfs[ft] for ft in live_ft) <= MAX_DRIVER_KERNEL_POSTINGS:
+        winners = run_kernel_on_driver(spark, store, snap, live_ft, plan.channels, kernel)
+    else:
+        winners = _kernel_on_spark(spark, store, snap, live_ft, plan.channels, kernel, del_df, docs)
+    return _fetch(spark, store, snap, winners, k)
+
+
+def _kernel_on_spark(
+    spark: SparkSession, store: SegmentStore, snap: Snapshot,
+    live_ft: list[tuple[str, str]], channels: list[Channel], kernel,
+    del_df: DataFrame | None, docs: Callable[[], DataFrame],
+) -> list:
+    """The winners of `run_kernel` over a Spark scan of the postings, with
+    channel rows (and deletes, as the deny channel) from a docs scan."""
     postings = read_segment_postings(spark, store, snap, live_ft)
     chan_docs = None
-    if plan.channels:
+    if channels:
         chan_docs = docs()
         # candidate-prune the channels scan: only docs in blocks that hold
         # query-term postings can match an anchored plan (every KernelPlan is
@@ -2363,21 +2521,21 @@ def search_indexed(
             pred = _candidate_block_pred(blocks)
             if pred is not None:
                 chan_docs = chan_docs.where(pred)
-    extras = _channels_df(spark, chan_docs, plan.channels, del_df)
-    kernel = _make_kernel(plan.tree, weights, avgdl, k, plan.phrase_fts)
-    local = run_kernel(postings, extras, kernel)
+    extras = _channels_df(spark, chan_docs, channels, del_df)
+    return run_kernel(postings, extras, kernel).collect()
 
-    # FETCH PHASE (SearchPhaseController analog): the kernels return at most
-    # buckets*k winners — collect that tiny set to the coordinator and point-
-    # read ONLY their keys from the docs tables on the driver, with an
-    # ordinal IN-filter per segment that prunes row groups (docs files are
-    # ordinal-sorted): O(k) reads, no Spark job.
-    winners = local.collect()
+
+def _fetch(spark: SparkSession, store: SegmentStore, snap: Snapshot, winners, k: int) -> DataFrame:
+    """FETCH PHASE (SearchPhaseController analog), shared by both kernel
+    drivers: the kernels return at most buckets*k winners, as (segment,
+    ordinal, score). Point-read ONLY their keys from the docs tables on the
+    driver, with an ordinal IN-filter per segment that prunes row groups
+    (docs files are ordinal-sorted): O(k) reads, no Spark job."""
     if not winners:
         return _empty_result(spark, store, snap)
     by_seg: dict[str, dict[int, float]] = {}
-    for r in winners:
-        by_seg.setdefault(r.segment, {})[r.ordinal] = r.score
+    for seg, ordinal, score in winners:
+        by_seg.setdefault(seg, {})[ordinal] = score
     hits = {"conv_id": [], "turn_idx": [], "score": []}
     for seg, ordmap in by_seg.items():
         t = read_point(

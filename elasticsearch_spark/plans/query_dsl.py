@@ -1630,6 +1630,23 @@ def _multi_match_cross(ctx: _Ctx, body: dict) -> Compiled:
     return Compiled(scored=agg.where(F.col("_nm") >= need).drop("_nm"))
 
 
+def phrase_prefix_expansions(docs: DataFrame, field: str, pref: str, max_exp: int) -> list[str]:
+    """match_phrase_prefix's expansion set: the distinct tokens of `field`
+    in `docs` that start with `pref`, in term order, capped at `max_exp`.
+    The expansion comes from the WHOLE corpus (the terms dict is index-wide,
+    not filter-scoped), as a bounded TakeOrderedAndProject: at most
+    `max_exp` strings ever reach the driver."""
+    return [
+        r.t
+        for r in docs.select(F.explode(analysis.tokens(field)).alias("t"))
+        .where(F.col("t").startswith(pref))
+        .distinct()
+        .orderBy("t")
+        .limit(max_exp)
+        .collect()
+    ]
+
+
 def _match_phrase_prefix(ctx: _Ctx, body: dict) -> Compiled:
     """match_phrase_prefix (MatchPhraseFrefixQueryBuilder, reg
     SearchModule.java:783): phrase of the leading terms with the trailing
@@ -1650,22 +1667,7 @@ def _match_phrase_prefix(ctx: _Ctx, body: dict) -> Compiled:
     if not qterms:
         return Compiled(predicate=F.lit(False))
     lead, pref = qterms[:-1], qterms[-1]
-    max_exp = int(spec.get("max_expansions", 50))
-    # dictionary expansion from the WHOLE corpus (the terms dict is
-    # index-wide, not filter-scoped): distinct tokens with the prefix, term
-    # order, capped — a bounded TakeOrderedAndProject, <= max_exp strings
-    # ever reach the driver
-    exps = [
-        r.t
-        for r in ctx.docs.select(
-            F.explode(analysis.tokens(field)).alias("t")
-        )
-        .where(F.col("t").startswith(pref))
-        .distinct()
-        .orderBy("t")
-        .limit(max_exp)
-        .collect()
-    ]
+    exps = phrase_prefix_expansions(ctx.docs, field, pref, int(spec.get("max_expansions", 50)))
     stats_terms = sorted(set(lead) | set(exps))
     stats = M.corpus_stats(ctx.docs, ctx.key_cols, stats_terms or [pref], field)
     cand = ctx.docs if ctx.base_pred is None else ctx.docs.where(ctx.base_pred)

@@ -2,12 +2,14 @@
 
 Defaults chosen for local[N] testing but scale-aware: AQE on (runtime re-plan,
 skew-join splitting), shuffle partitions sized to cores (overridable for real
-clusters), Arrow enabled for every pandas-UDF kernel.
+clusters), Arrow enabled for every pandas-UDF kernel. `spark_jobs` counts
+the Spark jobs a call starts, for tests and `bench.py`.
 """
 
 from __future__ import annotations
 
 import os
+import uuid
 
 from pyspark.sql import SparkSession
 
@@ -69,3 +71,19 @@ def get_spark(
     for k, v in (extra_conf or {}).items():
         b = b.config(k, v)
     return b.getOrCreate()
+
+
+def spark_jobs(spark, fn):
+    """Run `fn()` and count the Spark jobs it started: returns (result, jobs).
+
+    The jobs are tagged with a fresh job group and counted from the status
+    tracker once the listener bus has delivered their events."""
+    sc = spark.sparkContext
+    group = f"spark-jobs-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "counted by spark_jobs")
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty(30_000)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))

@@ -242,20 +242,36 @@ def _rows(df):
     return sorted((r.conv_id, r.turn_idx, round(r.score, 4)) for r in df.collect())
 
 
+def _oracle_rows(duck, qd) -> list:
+    try:
+        return sorted(
+            (c, int(t), round(float(s), 4))
+            for c, t, s in duck.execute(oracle.search_sql(qd, K)).fetchall()
+        )
+    except ValueError as e:
+        pytest.skip(f"oracle cannot express generated query: {e}")
+
+
 @pytest.mark.parametrize("seed", range(N_QUERIES))
 def test_three_engines_agree(seed, spark, transcripts, store, vocab, duck):
     from elasticsearch_spark.operators import topk
 
     rng = random.Random(1000 + seed)
     qd = _gen_query(rng, vocab)
-    try:
-        want = sorted(
-            (c, int(t), round(float(s), 4))
-            for c, t, s in duck.execute(oracle.search_sql(qd, K)).fetchall()
-        )
-    except ValueError as e:
-        pytest.skip(f"oracle cannot express generated query: {e}")
+    want = _oracle_rows(duck, qd)
     got_logical = _rows(Q.search(transcripts, qd, KEYS, k=K))
     got_indexed = _rows(topk.search_indexed(spark, store, qd, k=K))
     assert got_logical == want, f"logical vs oracle for {qd}"
     assert got_indexed == want, f"indexed vs oracle for {qd}"
+
+
+@pytest.mark.parametrize("seed", range(N_QUERIES))
+def test_spark_kernel_agrees_with_oracle(seed, spark, store, vocab, duck, monkeypatch):
+    """The same queries with the kernel forced onto Spark (a zero driver
+    cap): the fuzz store has no deletes, so it is under the cap otherwise."""
+    from elasticsearch_spark.operators import topk
+
+    monkeypatch.setattr(topk, "MAX_DRIVER_KERNEL_POSTINGS", 0)
+    qd = _gen_query(random.Random(1000 + seed), vocab)
+    want = _oracle_rows(duck, qd)
+    assert _rows(topk.search_indexed(spark, store, qd, k=K)) == want, f"indexed vs oracle for {qd}"

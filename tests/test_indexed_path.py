@@ -82,20 +82,37 @@ def _rows(df):
     return sorted((r.conv_id, r.turn_idx, r.score) for r in df.collect())
 
 
+@pytest.fixture
+def spark_kernel(monkeypatch):
+    """Every KernelPlan query takes the Spark kernel path (a zero driver cap)."""
+    monkeypatch.setattr(topk, "MAX_DRIVER_KERNEL_POSTINGS", 0)
+
+
 @pytest.mark.parametrize("qi", range(len(INDEXED_QUERIES)))
 def test_indexed_equals_logical(spark, transcripts, store, qi):
+    """The fixture store's queries are all under the driver cap."""
     qd = INDEXED_QUERIES[qi]
     want = _rows(Q.search(transcripts, qd, KEYS, k=10))
     got = _rows(topk.search_indexed(spark, store, qd, k=10))
     assert got == want, f"query {qd}"
 
 
+@pytest.mark.parametrize("qi", range(len(INDEXED_QUERIES)))
+def test_indexed_equals_logical_on_spark_kernel(spark, transcripts, store, spark_kernel, qi):
+    test_indexed_equals_logical(spark, transcripts, store, qi)
+
+
 @pytest.mark.parametrize("qi", [0, 1, 4, 7])
 def test_multi_segment_equals_single(spark, transcripts, store, store_multi, qi):
-    """query(S1 ∪ S2 ∪ S3) == query(single segment) — merge invariant."""
+    """query(S1 ∪ S2 ∪ S3) == query(single segment) — merge invariant. Both
+    run the kernel on the driver, the second over three segments."""
     qd = INDEXED_QUERIES[qi]
-    one = _rows(topk.search_indexed(spark, store, qd, k=10))
-    many = _rows(topk.search_indexed(spark, store_multi, qd, k=10))
+    one, jobs_one = spark_jobs(spark, lambda: _rows(topk.search_indexed(spark, store, qd, k=10)))
+    many, jobs_many = spark_jobs(
+        spark, lambda: _rows(topk.search_indexed(spark, store_multi, qd, k=10))
+    )
+    assert len(store_multi.snapshot().segments) == 3
+    assert (jobs_one, jobs_many) == (0, 0)
     assert one == many
 
 
@@ -141,13 +158,84 @@ def test_ordinals_dense_and_key_ordered(spark, store, tmp_path, monkeypatch):
 
 
 MATCHING = {"match": {"text": "spark query fast"}}
+ROLE_FILTERED = INDEXED_QUERIES[4]  # a bool with a `role` filter channel
 KERNEL_JOBS = 3  # the postings cogroup; every other read is a driver read
 
 
-def test_matching_query_runs_only_the_kernel_jobs(spark, store):
+@pytest.mark.parametrize("qd", [MATCHING, ROLE_FILTERED], ids=["match", "role_filter"])
+def test_small_matching_query_runs_no_spark_job(spark, store, qd):
+    """Under the cap the kernel, its channels and the fetch run on the driver."""
+    rows, jobs = spark_jobs(spark, lambda: topk.search_indexed(spark, store, qd).collect())
+    assert len(rows) == 10
+    assert jobs == 0
+
+
+def test_matching_query_runs_only_the_kernel_jobs(spark, store, spark_kernel):
     rows, jobs = spark_jobs(spark, lambda: topk.search_indexed(spark, store, MATCHING).collect())
     assert len(rows) == 10
     assert jobs <= KERNEL_JOBS
+
+
+def test_snapshot_with_deletes_takes_the_spark_path(spark, transcripts, tmp_path):
+    """A delete file keeps the kernel on Spark, even under the cap. The
+    engine's BM25 stats still count deleted docs (as ES does until a merge),
+    so the logical plan over the whole corpus, less the deleted keys, is the
+    expected answer."""
+    st = index_build.build_index(spark, transcripts, str(tmp_path), n_slices=1, partitions=4)
+    top3 = sorted(_rows(topk.search_indexed(spark, st, MATCHING, k=10)), key=lambda r: -r[2])[:3]
+    gone = {(c, t) for c, t, _ in top3}
+    pred = " or ".join(f"(conv_id = '{c}' and turn_idx = {t})" for c, t in sorted(gone))
+    assert update.delete_by_query(spark, st, pred)[0] == 3
+    rows, jobs = spark_jobs(spark, lambda: _rows(topk.search_indexed(spark, st, MATCHING, k=10)))
+    assert 0 < jobs <= KERNEL_JOBS
+    live = [
+        r for r in sorted(_rows(Q.search(transcripts, MATCHING, KEYS, k=13)),
+                          key=lambda r: (-r[2], r[0], r[1]))
+        if (r[0], r[1]) not in gone
+    ]
+    assert rows == sorted(live[:10])
+
+
+def test_phrase_prefix_expands_over_live_docs_under_deletes(spark, tmp_path):
+    """With a delete file, match_phrase_prefix expands its prefix over the
+    live docs, as the logical twin does: a term that only deleted docs hold
+    must not take the one max_expansions slot."""
+    rows = [
+        ("c1", 0, "user", "alpha zzaa", "", None),
+        ("c2", 0, "user", "alpha zzbb", "", None),
+        ("c3", 0, "user", "beta gamma", "", None),
+        ("c4", 0, "user", "alpha beta", "", None),
+    ]
+    df = spark.createDataFrame(
+        rows, "conv_id string, turn_idx int, role string, text string, tool string, ts timestamp"
+    )
+    st = index_build.build_index(spark, df, str(tmp_path), n_slices=1, partitions=1)
+    update.delete_by_query(spark, st, "conv_id = 'c1'")
+    qd = {"match_phrase_prefix": {"text": {"query": "alpha zz", "max_expansions": 1}}}
+    got = [(r.conv_id, r.turn_idx) for r in topk.search_indexed(spark, st, qd).collect()]
+    want = [(r.conv_id, r.turn_idx) for r in Q.search(update.read_snapshot_table(spark, st), qd, KEYS).collect()]
+    assert got == want == [("c2", 0)]
+
+
+@pytest.mark.parametrize("name", ["function_score_topk", "terms_set_msm"])
+def test_value_channels_on_the_driver_equal_the_oracle(spark, store, sf_dir, name):
+    """function_score values and terms_set thresholds are value channels:
+    on the driver path their rows come from a projection over a local
+    relation, and their block bounds from chan_ub."""
+    import duckdb
+
+    from elasticsearch_spark import oracle
+    from elasticsearch_spark.queryset import SEARCH_QUERIES
+
+    qd = SEARCH_QUERIES[name]
+    con = duckdb.connect()
+    con.execute(f"CREATE VIEW documents AS SELECT * FROM '{sf_dir}/documents.parquet'")
+    want = sorted(
+        (c, int(t), round(float(s), 4)) for c, t, s in con.execute(oracle.search_sql(qd, 10)).fetchall()
+    )
+    got, jobs = spark_jobs(spark, lambda: _rows(topk.search_indexed(spark, store, qd, k=10)))
+    assert jobs == 0
+    assert got == want and got
 
 
 def test_channel_less_queries_build_no_docs_frame(spark, store, monkeypatch):

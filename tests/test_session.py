@@ -19,6 +19,7 @@ from elasticsearch_spark.session import get_spark
 from elasticsearch_spark.sources.transcripts import generate_transcripts
 
 index_build.LOCAL_BUILD_MAX_ROWS = 0  # build in Spark tasks (mapInArrow)
+topk.MAX_DRIVER_KERNEL_POSTINGS = 0  # run the kernel in Spark tasks (applyInPandas)
 spark = get_spark(master="local[2]")
 store = index_build.build_index(spark, generate_transcripts(spark, 500, seed=3), "store")
 assert store.snapshot().segments[0].metrics["build_path"] == "spark"
